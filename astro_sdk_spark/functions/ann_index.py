@@ -53,8 +53,10 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from astro_sdk_spark.functions.similarity import (
+    _nearest_centroid_ids,
     cosine_similarity_col,
     nearest_centroids,
 )
@@ -464,11 +466,11 @@ def ann_index_topk(
     # generation), not mid-commit states.
     cent = _live(spark.table(cent_t), g).select("cent_id", "vec")
     # The geometry guard is FUSED with the centroid collect the probe
-    # assignment needs anyway (guide §1.2 driver-side work): one job
-    # fetches the contractually-small centroid set, the guard reads
-    # count/dim from the collected rows, and ``nearest_centroids`` /
-    # ``ivfpq_scan_lists`` receive the same rows instead of re-collecting
-    # — two driver-synchronous jobs per topk call become one.
+    # needs anyway: one job fetches the contractually-small centroid set,
+    # the guard reads count/dim from the collected rows, and the probe —
+    # picked on the driver from the query batch, collected once — uses
+    # the same rows. A call's jobs are: meta, centroids, codebooks (pq),
+    # queries, and the lists scan the caller's action runs.
     cent_rows = cent.collect()
     c_n = len(cent_rows)
     c_d = max((len(r.vec) for r in cent_rows), default=None)
@@ -499,35 +501,38 @@ def ann_index_topk(
             cent_vec_col="vec",
             _cents_rows=cent_rows,
         )
-    qdf = queries.select(
+    qrows = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
+    ).collect()
+    cells = (
+        _nearest_centroid_ids(
+            [r._qvec for r in qrows], cent_rows, nprobe, digits
+        ).tolist()
+        if qrows
+        else []
     )
-    probes = nearest_centroids(
-        qdf,
-        cent,
-        id_col="query_id",
-        vec_col="_qvec",
-        n=nprobe,
-        cent_id_col="cent_id",
-        cent_vec_col="vec",
-        round_digits=digits,
-        _cents_rows=cent_rows,
-    )
-    # the probe set is contractually small (|queries| × nprobe — the same
-    # tiny-side device as the PQ codebooks), so collect the probed list
-    # ids once and push them as a STATIC partition filter: the lists scan
-    # then opens only the probed directories, no dynamic-pruning luck
-    # required
-    probed_ids = sorted(
-        {r.cent_id for r in probes.select("cent_id").distinct().collect()}
+    # the probe relation, one row per (query, probed list), built on the
+    # driver: |queries| × nprobe rows — the same tiny-side device as the PQ
+    # codebooks. Its list ids are also pushed as a STATIC partition filter,
+    # so the lists scan opens only the probed directories, no
+    # dynamic-pruning luck required. An empty batch probes nothing and
+    # answers with no rows.
+    probe_rows = [
+        (r.query_id, r._qvec, c) for r, cs in zip(qrows, cells) for c in cs
+    ]
+    probes = spark.createDataFrame(
+        probe_rows,
+        T.StructType([
+            T.StructField("query_id", queries.schema[id_col].dataType),
+            T.StructField("_qvec", queries.schema[vec_col].dataType),
+            T.StructField("cent_id", cent.schema["cent_id"].dataType),
+        ]),
     )
     lists = _live(spark.table(lists_t), g).filter(
-        F.col("cent_id").isin(probed_ids)
+        F.col("cent_id").isin(sorted({c for _, _, c in probe_rows}))
     )
-    pairs = (
-        probes.join(lists, "cent_id")
-        .join(F.broadcast(qdf), "query_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
+    pairs = lists.join(F.broadcast(probes), "cent_id").filter(
+        F.col("query_id") != F.col("cand_id")
     )
     scored = pairs.select(
         "query_id",

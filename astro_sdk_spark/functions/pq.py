@@ -370,7 +370,8 @@ def ivfpq_topk(
     (cent_id, pq_code) — a few bytes per vector — and a query touches
     ``nprobe/n_centroids`` of it with table lookups instead of float math.
     The probe map (|q| × nprobe pairs) and per-query distance tables are
-    driver-computed from the contractually small query side and broadcast;
+    computed on the driver from the contractually small query side,
+    collected once, and broadcast;
     candidates are pruned to the union of probed lists BEFORE the scan
     (at scale, lists are partition-pruned by ``cent_id``), then each
     partition emits its local top-k per query.
@@ -420,37 +421,41 @@ def ivfpq_scan_lists(
     """The IVFADC scan of :func:`ivfpq_topk` over PRE-BUILT inverted
     lists — ``lists`` carries ``(id_col, code_col, cent_col)`` rows, e.g.
     read back from a persisted index (functions/ann_index.py) instead of
-    encoded inline. Probe map and distance tables are driver-computed
-    from the contractually small query side; the lists scan is pruned to
-    the union of probed cells BEFORE the Arrow boundary (a static
-    partition filter when the lists table is partitioned by cell)."""
+    encoded inline. The query batch is collected once; its probe map and
+    distance tables are computed from those rows on the driver (the probe
+    with ``nearest_centroids``' own kernel and default rounding, so probes
+    match an in-query assignment bit for bit); the lists scan is pruned
+    to the union of probed cells BEFORE the Arrow boundary (a static
+    partition filter when the lists table is partitioned by cell).
+    ``round_digits`` rounds ``adist`` only."""
     import numpy as np
     import pandas as pd
 
-    from astro_sdk_spark.functions.similarity import nearest_centroids
+    from astro_sdk_spark.functions.similarity import _nearest_centroid_ids
 
     m, kc, dsub = _check_codebooks(codebooks)
     cb = np.asarray(codebooks, dtype=np.float64)
     cent_id_col = cent_id_col or id_col
     cent_vec_col = cent_vec_col or vec_col
 
-    probe_rows = nearest_centroids(
-        queries.select(F.col(id_col).alias("_qid"), F.col(vec_col)),
-        centroids, id_col="_qid", vec_col=vec_col, n=nprobe,
-        cent_id_col=cent_id_col, cent_vec_col=cent_vec_col,
-        _cents_rows=_cents_rows,
-    ).collect()
-    probe_map: dict = {}
-    for r in probe_rows:
-        probe_map.setdefault(r._qid, set()).add(r.cent_id)
-    if not probe_map:
-        raise ValueError("queries is empty")
-
     qrows = queries.select(
         F.col(id_col).alias("_qid"), F.col(vec_col).alias("_qv")
     ).collect()
+    if not qrows:
+        raise ValueError("queries is empty")
     qids = [r._qid for r in qrows]
-    qmat = _as_matrix([r._qv for r in qrows]).reshape(len(qrows), m, dsub)
+    qvecs = [r._qv for r in qrows]
+    probes = _nearest_centroid_ids(
+        qvecs,
+        _cents_rows
+        if _cents_rows is not None
+        else centroids.select(cent_id_col, cent_vec_col).collect(),
+        nprobe,
+    )
+    probe_map: dict = {}
+    for qid, cells in zip(qids, probes.tolist()):
+        probe_map.setdefault(qid, set()).update(cells)
+    qmat = _as_matrix(qvecs).reshape(len(qrows), m, dsub)
     tables = ((qmat[:, :, None, :] - cb[None, :, :, :]) ** 2).sum(axis=3)
 
     all_probed = sorted({c for s in probe_map.values() for c in s})

@@ -231,6 +231,49 @@ def lsh_bucket_join(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
+def _centroid_matrix(rows):
+    """``(cent_ids, cmat)`` from collected ``(cent_id, vec)`` rows: ids in
+    ascending order (the order the ranking's id tiebreak relies on) and
+    the matching L2-normalised float64 matrix."""
+    import numpy as np
+
+    rows = sorted(rows, key=lambda r: r[0])
+    cmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    return (
+        np.array([r[0] for r in rows]),
+        cmat / np.linalg.norm(cmat, axis=1, keepdims=True),
+    )
+
+
+def _nearest_rows(vecs, cmat, n: int, round_digits: int):
+    """Row positions in ``cmat`` of each vector's ``n`` nearest centroids.
+
+    The one assignment kernel: the executor side of
+    :func:`nearest_centroids` and the driver-side probe of
+    :func:`_nearest_centroid_ids` both call it, so a probe picked on the
+    driver is bit-identical to the same vector's executor assignment.
+    ``vecs`` must be non-empty."""
+    import numpy as np
+
+    vm = np.stack([np.asarray(x, dtype=np.float64) for x in vecs])
+    vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
+    sims = np.round(vm @ cmat.T, round_digits)
+    # stable argsort of -sims: equal rounded cosines keep
+    # ascending centroid order — exactly ORDER BY sim DESC, id
+    return np.argsort(-sims, axis=1, kind="stable")[:, :n]
+
+
+def _nearest_centroid_ids(vecs, cent_rows, n: int, round_digits: int = 4):
+    """Driver-side :func:`nearest_centroids` for a collected, non-empty
+    batch of vectors (e.g. a top-k request's queries) against collected
+    ``(cent_id, vec)`` rows: a ``len(vecs) × min(n, |centroids|)`` array
+    of centroid ids, nearest first, row ``i`` for ``vecs[i]`` — the same
+    ids, in the same order, that ``nearest_centroids(..., n=n)`` emits
+    for that vector, with no Spark job."""
+    cent_ids, cmat = _centroid_matrix(cent_rows)
+    return cent_ids[_nearest_rows(vecs, cmat, n, round_digits)]
+
+
 def nearest_centroids(
     df: DataFrame,
     centroids: DataFrame,
@@ -241,18 +284,11 @@ def nearest_centroids(
     cent_vec_col: str = "embedding",
     round_digits: int = 4,
     use_arrow: bool = True,
-    _cents_rows: list | None = None,
 ) -> DataFrame:
     """``(id_col, cent_id)`` — each vector's ``n`` nearest centroids by
     cosine, rounded to ``round_digits`` before ranking, ties broken on
     ascending centroid id (the determinism contract every oracle here
     replicates).
-
-    ``_cents_rows`` (private): the centroid rows, pre-collected by the
-    caller as ``centroids.select(cent_id_col, cent_vec_col).collect()``
-    — lets a caller that already needed the rows (e.g. the persisted
-    index's geometry guard) skip this function's own collect job. Only
-    honoured on the Arrow path; the broadcast-join fallback ignores it.
 
     This is THE inner loop of centroid-based indexing (IVF build +
     probe, SemDeDup clustering): dense matrix × small-matrix. Default
@@ -264,20 +300,14 @@ def nearest_centroids(
     norms precomputed once per side rather than once per pair."""
     if use_arrow:
         try:
-            import numpy as np
+            import numpy as np  # noqa: F401 - the kernel's dependency
             import pandas as pd  # noqa: F401 - mapInPandas interface
         except ImportError:  # pragma: no cover - numpy ships with pyspark
             use_arrow = False
     if use_arrow:
-        cents = sorted(
-            _cents_rows
-            if _cents_rows is not None
-            else centroids.select(cent_id_col, cent_vec_col).collect(),
-            key=lambda r: r[0],
+        cent_ids, cmat = _centroid_matrix(
+            centroids.select(cent_id_col, cent_vec_col).collect()
         )
-        cent_ids = np.array([r[0] for r in cents])
-        cmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in cents])
-        cmat = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
         spark = df.sparkSession
         id_type = dict(df.dtypes)[id_col]
         cent_type = dict(centroids.dtypes)[cent_id_col]
@@ -292,14 +322,7 @@ def nearest_centroids(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                vm = np.stack(
-                    [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-                )
-                vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
-                sims = np.round(vm @ cm.T, round_digits)
-                # stable argsort of -sims: equal rounded cosines keep
-                # ascending centroid order — exactly ORDER BY sim DESC, id
-                order = np.argsort(-sims, axis=1, kind="stable")[:, :top_n]
+                order = _nearest_rows(pdf[vec_col], cm, top_n, round_digits)
                 ids = pdf[id_col].to_numpy().repeat(order.shape[1])
                 yield pd.DataFrame(
                     {id_col: ids, "cent_id": cid[order].ravel()}

@@ -128,15 +128,19 @@ def gapfill(
         if fill == "locf":
             dense = dense.withColumn("_v", prev_v)
         else:  # linear
+            # the next observation is the LAST one of a growing frame over
+            # the reversed order: Spark evaluates a row-relative frame
+            # ending at unboundedFollowing afresh for every row (quadratic
+            # in partition size), a growing frame incrementally
             w_next = (
-                Window.partitionBy("_g").orderBy("_b")
-                .rowsBetween(0, Window.unboundedFollowing)
+                Window.partitionBy("_g").orderBy(F.desc("_b"))
+                .rowsBetween(Window.unboundedPreceding, 0)
             )
             prev_b = F.last(
                 F.when(F.col("_v").isNotNull(), F.col("_b")), ignorenulls=True
             ).over(w_prev)
-            next_v = F.first("_v", ignorenulls=True).over(w_next)
-            next_b = F.first(
+            next_v = F.last("_v", ignorenulls=True).over(w_next)
+            next_b = F.last(
                 F.when(F.col("_v").isNotNull(), F.col("_b")), ignorenulls=True
             ).over(w_next)
             frac = (F.col("_b") - prev_b) / (next_b - prev_b)

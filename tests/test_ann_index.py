@@ -364,6 +364,47 @@ def test_stream_batch_path_job_count_is_bounded(spark, emb, idx):
     assert 1 <= len(jobs) <= 6, f"per-batch job count crept up: {jobs}"
 
 
+# Spark jobs of one top-k call, its result collect included: meta read,
+# centroid collect, codebook collect (pq only), query collect, and the
+# lists scan — 2 jobs for the pq scan, 4 for the flat scan (the probe
+# relation's broadcast plus the AQE stages of the dedupe and rank).
+_TOPK_JOBS = {"pq": 6, "flat": 7}
+
+
+@pytest.mark.parametrize("kind", ["pq", "flat"])
+def test_topk_job_count_is_pinned(spark, emb, idx, kind):
+    """A serving request pays a fixed number of driver-synchronous Spark
+    jobs. The probe is picked on the driver from the one collect of the
+    query batch; a regression that brings back a probe job, or collects
+    the queries twice, pushes the count past the pin."""
+    kw = {"codebooks": _codebooks_from(emb)} if kind == "pq" else {}
+    build_ann_index(spark, emb, idx, emb.filter(F.col("vec_id") < 16), **kw)
+    queries = emb.filter(F.col("vec_id") < 8)
+    sc = spark.sparkContext
+    group = f"ann_topk_{kind}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        rows = ann_index_topk(spark, queries, idx, nprobe=4, k=10).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= _TOPK_JOBS[kind], (
+        f"{kind} ann_index_topk ran {len(jobs)} Spark jobs, budget "
+        f"{_TOPK_JOBS[kind]} (meta, centroids, codebooks, queries, scan): "
+        f"a per-request probe or collect job came back"
+    )
+
+
+def test_flat_topk_empty_queries_answers_nothing(spark, emb, idx):
+    """The flat index answers an empty query batch with an empty result
+    of the usual columns (the PQ path raises, see test_pq)."""
+    build_ann_index(spark, emb, idx, emb.filter(F.col("vec_id") < 16))
+    out = ann_index_topk(spark, emb.filter(F.col("vec_id") < 0), idx)
+    assert out.columns == ["query_id", "cand_id", "cosine", "rank"]
+    assert out.collect() == []
+
+
 def test_retrain_bumps_generation_and_hides_stale_appends(spark, emb, idx):
     """Retrain-under-stream contract (documented in ann_index_retrain /
     stream_ann_index_ingest): a writer still holding PRE-retrain meta

@@ -59,3 +59,33 @@ def test_partitioned_write_prunes(spark, eng, tmp_path):
     assert q.count() == 250
     assert "PartitionFilters: [isnotnull(p" in plan or "p#" in plan
     eng.drop_table(t)
+
+
+def test_session_warehouse_is_fresh_and_outside_cwd(
+    spark, eng, tmp_path, tmp_path_factory, monkeypatch
+):
+    """The test session's managed tables live in a warehouse this session
+    created, outside the cwd: an orphaned ``spark-warehouse/<table>``
+    directory in the cwd (left by a killed run) cannot make a CREATE of
+    the same table fail with LOCATION_ALREADY_EXISTS."""
+    import os
+    from urllib.parse import urlparse
+
+    wh = os.path.realpath(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
+    cwd = os.path.realpath(os.getcwd())
+    base = os.path.realpath(tmp_path_factory.getbasetemp())
+    assert os.path.commonpath([wh, base]) == base, (wh, base)
+    assert os.path.commonpath([wh, cwd]) != cwd, (wh, cwd)
+
+    # the stale-orphan repro, from a cwd that holds one
+    orphan = tmp_path / "spark-warehouse" / "bkt_orphan"
+    orphan.mkdir(parents=True)
+    (orphan / "part-0.parquet").touch()
+    monkeypatch.chdir(tmp_path)
+    t = Table(name="bkt_orphan")
+    eng.drop_table(t)
+    try:
+        eng.load_dataframe_to_table(spark.range(3), t, bucket_by=(2, ["id"]))
+        assert spark.table("bkt_orphan").count() == 3
+    finally:
+        eng.drop_table(t)

@@ -79,11 +79,31 @@ def test_pq_topk_rank_contract(clustered):
     assert rows[0].vec_id == 0
 
 
-def test_pq_topk_empty_queries_raises(clustered):
+def test_pq_topk_empty_queries_raises(spark, clustered):
+    """An empty query batch is a ValueError on every PQ top-k entry point
+    — raised on the collected batch, before any numpy stacking."""
+    from astro_sdk_spark.functions.ann_index import (
+        ann_index_topk,
+        build_ann_index,
+        drop_ann_index,
+    )
+    from astro_sdk_spark.functions.pq import ivfpq_topk
+
     cb = train_pq(clustered, m=4, k=8, iters=1)
     codes = pq_encode(clustered, cb)
+    empty = clustered.filter(F.col("vec_id") < 0)
+    cents = clustered.filter(F.col("vec_id") < 8)
     with pytest.raises(ValueError, match="queries is empty"):
-        pq_topk(codes, cb, clustered.filter(F.col("vec_id") < 0))
+        pq_topk(codes, cb, empty)
+    with pytest.raises(ValueError, match="queries is empty"):
+        ivfpq_topk(empty, clustered, cents, cb, nprobe=2)
+    drop_ann_index(spark, "t_pq_empty_q")
+    try:
+        build_ann_index(spark, clustered, "t_pq_empty_q", cents, codebooks=cb)
+        with pytest.raises(ValueError, match="queries is empty"):
+            ann_index_topk(spark, empty, "t_pq_empty_q", nprobe=2)
+    finally:
+        drop_ann_index(spark, "t_pq_empty_q")
 
 
 def test_codebook_shape_validation(clustered):
@@ -140,6 +160,50 @@ def test_ivfpq_topk_scans_only_probed_lists(spark):
     }
     for r in out:
         assert full[(r.query_id, r.vec_id)] == r.adist
+
+
+def test_driver_probe_equals_nearest_centroids(spark):
+    """The driver-side probe that ivfpq_scan_lists and ann_index_topk use
+    picks exactly the rows nearest_centroids(..., n=nprobe) emits, in the
+    same nearest-first order — including a tie: two centroids whose
+    cosines differ below the rounding quantum, where the lower cent_id
+    must win although the higher one is nearer unrounded."""
+    import numpy as np
+
+    from astro_sdk_spark.functions.similarity import (
+        _nearest_centroid_ids,
+        nearest_centroids,
+    )
+
+    rng = np.random.RandomState(5)
+    dim, nprobe = 8, 3
+    # centroids 0-2, 4, 6, 7 point away from e0; 9 = e0; 5 and 3 both
+    # at cosine 0.6 to e0 once rounded, 5 a hair nearer before rounding
+    e = np.eye(dim)
+    cents = {i: (-e[0] + 0.3 * rng.randn(dim)).tolist() for i in (0, 1, 2, 4, 6, 7)}
+    cents[9] = e[0].tolist()
+    cents[5] = (0.6 * e[0] + 0.8 * e[1]).tolist()
+    cents[3] = (0.6 * e[0] + 0.8 * e[1] + 1e-6 * e[2]).tolist()
+    # the higher id first in input order, so only the sort gives 3 first
+    cent_df = spark.createDataFrame(
+        sorted(cents.items(), reverse=True), "vec_id long, embedding array<double>"
+    )
+    queries = [(100, e[0].tolist())] + [
+        (200 + i, rng.randn(dim).tolist()) for i in range(40)
+    ]
+    qdf = spark.createDataFrame(
+        queries, "vec_id long, embedding array<double>"
+    ).repartition(3)
+
+    got = _nearest_centroid_ids(
+        [v for _, v in queries], cent_df.collect(), nprobe
+    )
+    assert got.shape == (len(queries), nprobe)
+    assert got[0].tolist() == [9, 3, 5]
+    want: dict = {}
+    for r in nearest_centroids(qdf, cent_df, n=nprobe).collect():
+        want.setdefault(r.vec_id, []).append(r.cent_id)
+    assert want == {qid: ids.tolist() for (qid, _), ids in zip(queries, got)}
 
 
 def test_pq_topk_exact_tie_lower_id_wins(spark):

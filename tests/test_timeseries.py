@@ -76,6 +76,31 @@ def test_validation(spark):
         gapfill(df, 10, agg="sum", value_scale=100)
 
 
+def test_no_row_relative_frame_to_unbounded_following():
+    """Spark evaluates a frame that starts at the current row (or any
+    row-relative offset) and ends at ``unboundedFollowing`` afresh for
+    every row — quadratic in partition size. The next-value lookup is
+    ``last(ignorenulls)`` over the reversed order with a growing frame
+    instead (see gapfill). Only whole-partition frames, which start at
+    ``unboundedPreceding`` and are computed once per partition, may end
+    at ``unboundedFollowing``. (The DuckDB oracle SQL strings are not
+    Spark frames and are not checked.)"""
+    import pathlib
+    import re
+
+    import astro_sdk_spark
+
+    frame = re.compile(
+        r"(?:rows|range)Between\(\s*([^,]+?)\s*,\s*Window\.unboundedFollowing"
+    )
+    bad = []
+    for path in pathlib.Path(astro_sdk_spark.__file__).parent.rglob("*.py"):
+        for m in frame.finditer(path.read_text()):
+            if m.group(1) != "Window.unboundedPreceding":
+                bad.append(f"{path.name}: {m.group(0)}")
+    assert not bad, f"row-relative frame to unboundedFollowing: {bad}"
+
+
 # ---------------------------------------------------------------------------
 # funnel (ordered conversion)
 
