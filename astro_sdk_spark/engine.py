@@ -37,6 +37,127 @@ _CREATE_DB = "CREATE DATABASE IF NOT EXISTS {db}"
 LOAD_TABLE_AUTODETECT_ROWS_COUNT = 1000  # parity: settings.py:69-71
 
 
+# ------------------------------------------------ managed-table locations
+# The one place that turns a table name into its warehouse directory and
+# decides when that directory may be deleted. Module-level because writers
+# that hold only a SparkSession (stream store, ANN index, publish_table)
+# share it with SparkEngine.
+def _local_path(uri: str | None) -> str | None:
+    """Filesystem path of a local (``file:`` or scheme-less) URI, with
+    percent-encoding unquoted; None for remote or empty URIs."""
+    from urllib.parse import unquote, urlparse
+
+    loc = urlparse(uri or "")
+    if loc.scheme not in ("", "file"):
+        return None
+    return unquote(loc.path or loc.netloc) or None
+
+
+def _database_location(spark: SparkSession, db: str) -> str | None:
+    """Local directory of database ``db``: its catalog ``locationUri`` (so
+    a database created with a custom ``LOCATION`` resolves correctly),
+    else the default layout (``<wh>`` for default, ``<wh>/<db>.db``
+    elsewhere). None for remote warehouses."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        uri = spark.catalog.getDatabase(db).locationUri
+    except AnalysisException:  # unknown database: default layout
+        uri = None
+    if uri:
+        return _local_path(uri)
+    base = _local_path(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
+    if base is None or db.lower() == "default":
+        return base
+    return os.path.join(base, f"{db.lower()}.db")
+
+
+def managed_location(spark: SparkSession, qualified_name: str) -> str | None:
+    """Local managed-table directory for a (possibly unqualified) table
+    name; unqualified names resolve against the session's current
+    database, exactly as ``saveAsTable`` does. None for remote
+    warehouses."""
+    db, _, table = qualified_name.rpartition(".")
+    base = _database_location(spark, db or spark.catalog.currentDatabase())
+    return None if base is None else os.path.join(base, table.lower())
+
+
+def location_is_partial_write(
+    spark: SparkSession, qualified_name: str, min_stale_s: float = 300.0
+) -> bool:
+    """True when the managed location for ``qualified_name`` exists but
+    holds only write-in-progress debris (``_temporary``, hidden/marker
+    files), NO committed data files, AND the debris is provably STALE —
+    the signature of a run killed mid-``saveAsTable``. A writer creating
+    a USER-supplied name gates its cleanup on this: only then is the
+    directory provably not someone's data. Missing directory → False.
+
+    The staleness guard matters because a CONCURRENT first-creation
+    ``saveAsTable`` by another session passes the marker-only shape test
+    while very much alive (``_temporary`` exists, no catalog entry until
+    commit): only when the newest mtime anywhere under the directory
+    (``_temporary`` contents included) is older than ``min_stale_s`` do
+    we call it dead. A live writer touches files continuously; a killed
+    one never will again."""
+    import time
+
+    path = managed_location(spark, qualified_name)
+    if path is None or not os.path.isdir(path):
+        return False
+    newest = os.path.getmtime(path)
+    for root, _dirs, files in os.walk(path):
+        for entry in os.listdir(root) if root == path else []:
+            if not entry.startswith(("_", ".")):
+                return False  # committed (or foreign) data file — not ours
+        for name in files:
+            try:
+                newest = max(newest, os.path.getmtime(os.path.join(root, name)))
+            except OSError:  # racing writer just moved/removed it → alive
+                return False
+        try:
+            newest = max(newest, os.path.getmtime(root))
+        except OSError:
+            return False
+    return (time.time() - newest) >= min_stale_s
+
+
+def drop_managed_table(spark: SparkSession, qualified_name: str) -> None:
+    """DROP ``qualified_name`` when the catalog knows it; otherwise remove
+    its orphaned managed location. A killed run (or a session with its
+    own in-memory catalog) leaves the directory behind with no catalog
+    entry, and the next managed write to the name then fails with
+    LOCATION_ALREADY_EXISTS whatever its save mode. Every caller that
+    drops a name wants that orphan gone too."""
+    if spark.catalog.tableExists(qualified_name):
+        spark.sql(_DROP.format(table=quote_identifier(qualified_name)))
+    else:
+        _remove_orphan(spark, qualified_name)
+
+
+def _remove_orphan(spark: SparkSession, qualified_name: str) -> None:
+    """Delete the managed location of a name the catalog does not know."""
+    import shutil
+
+    path = managed_location(spark, qualified_name)
+    if path is not None:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def refuse_orphaned_location(spark: SparkSession, qualified_name: str) -> None:
+    """Raise ``FileExistsError`` naming the path when ``qualified_name`` is
+    unknown to the catalog but its managed location holds files — the
+    state in which an append or create would fail with Spark's bare
+    LOCATION_ALREADY_EXISTS. Callers invoke it only for names the
+    catalog does not know."""
+    path = managed_location(spark, qualified_name)
+    if path is not None and os.path.isdir(path) and os.listdir(path):
+        raise FileExistsError(
+            f"{qualified_name} is not in the catalog, but its managed "
+            f"location {path} holds files left by an earlier run; remove "
+            f"them with SparkEngine.vacuum_orphans() or write in replace mode"
+        )
+
+
 @dataclass
 class QueryModifier:
     """Pre/post statement hooks — reference ``src/astro/query_modifier.py:6-29``."""
@@ -145,8 +266,11 @@ class SparkEngine:
         if table.columns is None:
             raise ValueError(f"Table {table.name} has no columns schema")
         self.create_schema_if_applicable(table.metadata.spark_database)
+        if self.table_exists(table):
+            return
+        refuse_orphaned_location(self.spark, table.qualified_name)
         empty = self.spark.createDataFrame([], table.columns)
-        empty.write.mode("ignore").saveAsTable(table.qualified_name)
+        empty.write.saveAsTable(table.qualified_name)
 
     def create_table_from_select_statement(
         self,
@@ -196,8 +320,10 @@ class SparkEngine:
         self._register_temp(table)
 
     def drop_table(self, table: BaseTable) -> None:
-        """Reference ``base.py:383-390`` / ``sql/operators/drop.py``."""
-        self.spark.sql(_DROP.format(table=quote_identifier(table.qualified_name)))
+        """DROP, or remove the orphaned location when the catalog does not
+        know the name (:func:`drop_managed_table`). Reference
+        ``base.py:383-390`` / ``sql/operators/drop.py``."""
+        drop_managed_table(self.spark, table.qualified_name)
 
     # ------------------------------------------------------------- temp reg
     def _register_temp(self, table: BaseTable) -> None:
@@ -338,7 +464,15 @@ class SparkEngine:
         sort_by: Sequence[str] | None = None,
     ) -> None:
         """DataFrame → managed table. Reference orchestration
-        ``base.py:474-542`` (replace ⇒ drop first, ``base.py:418-419``).
+        ``base.py:474-542``.
+
+        ``replace`` over an existing table overwrites it in place (not
+        drop-first: a DataFrame that reads the table itself still needs
+        its files while the write runs); ``replace`` over a name the
+        catalog does not know first clears any orphaned location.
+        ``append`` to an unknown name creates the table, and raises
+        ``FileExistsError`` (see :func:`refuse_orphaned_location`) when an
+        orphaned location holds files.
 
         Scale knobs (no reference counterpart — the warehouse owned physical
         layout there):
@@ -356,7 +490,12 @@ class SparkEngine:
             # explicit schema wins over inference (reference base.py:257-268)
             df = self._cast_to_schema(df, table.columns)
         mode = "overwrite" if if_exists == "replace" else "append"
-        if if_exists == "append" and self.table_exists(table):
+        if not self.table_exists(table):
+            if if_exists == "replace":
+                _remove_orphan(self.spark, table.qualified_name)
+            else:
+                refuse_orphaned_location(self.spark, table.qualified_name)
+        elif if_exists == "append":
             # align column order by name for positional insertInto safety
             target_cols = self.spark.table(table.qualified_name).columns
             df = df.select(*[F.col(c) for c in target_cols])
@@ -521,7 +660,7 @@ class SparkEngine:
             files_after = _file_count(after_df)
         else:
             staging = f"{qname}__compact_staging"
-            self.spark.sql(f"DROP TABLE IF EXISTS {quote_identifier(staging)}")
+            drop_managed_table(self.spark, staging)
             compacted.write.format("parquet").saveAsTable(staging)
             from astro_sdk_spark.operators.swap import swap_table
 
@@ -542,34 +681,45 @@ class SparkEngine:
         (LOCATION_ALREADY_EXISTS), so orphans both waste space and
         poison table names.
 
-        Only scans the session catalog's current-database warehouse
-        directory on the LOCAL filesystem (the sandbox/test layout);
-        object-store warehouses should use their native lifecycle rules
-        instead. Directories belonging to ANY registered table (current
-        database) are never touched. Run it at idle — an in-flight
-        staged write (CTAS/compaction staging) is indistinguishable
-        from an orphan until its table commits, so vacuuming
-        concurrently with writers can destroy their staging. Returns
-        the removed (or, with ``dry_run``, would-be-removed) paths."""
+        Scans the CURRENT database's location (resolved like every
+        managed-table location, see :func:`managed_location`) on the
+        LOCAL filesystem; object-store warehouses should use their
+        native lifecycle rules instead. Directories of the database's
+        registered tables, and of any database (``*.db`` or a custom
+        ``LOCATION`` inside the scanned one), are never touched. Run it
+        at idle — an in-flight staged write (CTAS/compaction staging) is
+        indistinguishable from an orphan until its table commits, so
+        vacuuming concurrently with writers can destroy their staging.
+        Returns the removed (or, with ``dry_run``, would-be-removed)
+        paths."""
         import shutil
 
-        wh = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        if "://" in wh and not wh.startswith("file:"):
+        catalog = self.spark.catalog
+        db = catalog.currentDatabase()
+        root = _database_location(self.spark, db)
+        if root is None:
             raise ValueError(
-                f"vacuum_orphans only supports local warehouses, got {wh!r}"
+                f"vacuum_orphans only supports local warehouses; database "
+                f"{db!r} is not on the local filesystem"
             )
-        root = wh.removeprefix("file:")
         if not os.path.isdir(root):
             return []
-        live = {
-            t.name.lower() for t in self.spark.catalog.listTables()
+        live = {t.name.lower() for t in catalog.listTables(db)}
+        databases = {
+            os.path.normpath(p)
+            for p in (_local_path(d.locationUri) for d in catalog.listDatabases())
+            if p
         }
         removed = []
         for entry in sorted(os.listdir(root)):
             path = os.path.join(root, entry)
             if not os.path.isdir(path):
                 continue
-            if entry.lower() in live or entry.endswith(".db"):
+            if (
+                entry.lower() in live
+                or entry.endswith(".db")
+                or os.path.normpath(path) in databases
+            ):
                 continue  # registered table or a database directory
             removed.append(path)
             if not dry_run:

@@ -594,17 +594,12 @@ def _flat_local_topk(scored: DataFrame, k: int) -> DataFrame:
 def drop_ann_index(spark: SparkSession, name: str) -> None:
     """Drop the index tables, including orphaned warehouse locations a
     previous session left behind (the derived ``__centroids``/``__lists``
-    /``__meta``/``__codebooks`` names are operator-owned, so the
-    unconditional scrub is safe — same contract as the sketch store's
-    staging names)."""
-    from astro_sdk_spark.operators.swap import scrub_orphaned_location
+    /``__meta``/``__codebooks`` names are operator-owned)."""
+    from astro_sdk_spark.engine import drop_managed_table
 
     _check_name(name)
     for t in _tables(name):
-        if spark.catalog.tableExists(t):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-        else:
-            scrub_orphaned_location(spark, t)
+        drop_managed_table(spark, t)
 
 
 def ann_index_stats(

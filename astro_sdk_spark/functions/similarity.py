@@ -11,12 +11,9 @@ Scale design:
   candidate set, so the only wide op is the final per-query top-k, done with
   a window over ``query_id`` — shuffle size = |queries| × |candidates kept|.
 - ``lsh_bucket_join`` is the scale path: random-hyperplane signatures
-  (SimHash for real vectors) computed JVM-side, candidates compared only
-  within matching bands — turns O(Q×N) into O(Q×N/2^bits) per band.
-- Hyperplanes travel as ONE broadcast array<array<array<double>>> column
-  (a single-row crossJoin), not as per-plane literal expressions — at real
-  dims (768·12·4 ≈ 37k literals) the literal form bloats the plan and
-  serializes it to every task; the broadcast form is O(1) plan size.
+  (SimHash for real vectors) from one Arrow-batched numpy matmul per
+  batch, candidates compared only within matching bands — turns O(Q×N)
+  into O(Q×N/2^bits) per band.
 - Banded signatures come from ONE scan with a posexplode over the per-band
   signature array — not a union of per-band scans.
 """
@@ -99,32 +96,6 @@ def random_hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(bits)]
 
 
-def band_signature_col(vec_col, band_planes):
-    """Signature of one band: bit i = sign(dot(v, band_planes[i])), packed
-    into a long. ``band_planes`` is an array<array<double>> COLUMN (usually
-    from a broadcast planes matrix), so the plan carries one reference, not
-    bits×dim literals. 2.0**i is exact in double for i ≤ 62 (shiftleft
-    needs a Python-int position, which a lambda index is not)."""
-    bit_terms = F.transform(
-        band_planes,
-        lambda p, i: F.when(
-            _dot(vec_col, p) >= 0,
-            F.pow(F.lit(2.0), i.cast("double")).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(bit_terms, F.lit(0).cast("long"), lambda acc, v: acc + v)
-
-
-def planes_matrix(spark, dim: int, bits: int, bands: int, seed: int = 42):
-    """The hyperplane tensor as a one-row DataFrame: planes[band][bit][dim].
-    CrossJoin+broadcast it onto the vector table (O(1) plan size)."""
-    flat = random_hyperplanes(dim, bits * bands, seed)
-    nested = [[flat[b * bits + i] for i in range(bits)] for b in range(bands)]
-    return spark.createDataFrame(
-        [(nested,)], "planes array<array<array<double>>>"
-    )
-
-
 def banded_signatures(
     df: DataFrame,
     dim: int,
@@ -133,48 +104,35 @@ def banded_signatures(
     bits: int = 12,
     bands: int = 4,
     seed: int = 42,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(id, vec, band, sig) — one row per (vector, band), from a single scan:
     the per-band signature array is computed once per row and posexploded.
 
-    Default path: hyperplane signatures are a dense matmul — batch_vectors
-    (n×dim) @ planes.T (dim×bits·bands) → signs → bit-pack. That is BLAS
-    territory, so it runs as an Arrow-batched pandas_udf over numpy (the
-    one place Python beats Catalyst expressions: higher-order-function
-    dot products are interpreted per element, the matmul is vectorized
-    ~100×). Fallback (``use_arrow=False``): pure built-in HOF expressions,
-    JVM-side, with the planes as one broadcast column — same results."""
-    if use_arrow:
-        try:
-            import numpy as np
-            import pandas as pd
-        except ImportError:  # pragma: no cover - numpy ships with pyspark
-            use_arrow = False
-    if use_arrow:
-        flat = random_hyperplanes(dim, bits * bands, seed)
-        planes_t = np.array(flat, dtype=np.float64).T  # dim × (bits·bands)
-        weights = np.array([1 << i for i in range(bits)], dtype=np.int64)
-        n_bands = bands
+    Hyperplane signatures are a dense matmul — batch_vectors (n×dim) @
+    planes.T (dim×bits·bands) → signs → bit-pack. That is BLAS territory,
+    so it runs as an Arrow-batched pandas_udf over numpy (the one place
+    Python beats Catalyst expressions: higher-order-function dot products
+    are interpreted per element, the matmul is vectorized ~100×)."""
+    import numpy as np
+    import pandas as pd
 
-        def _sigs_fn(v):
-            if len(v) == 0:
-                return pd.Series([], dtype=object)
-            mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-            bitmat = (mat @ planes_t) >= 0  # n × bits·bands
-            sigs = bitmat.reshape(len(mat), n_bands, -1).astype(np.int64) @ weights
-            return pd.Series(list(sigs))
+    flat = random_hyperplanes(dim, bits * bands, seed)
+    planes_t = np.array(flat, dtype=np.float64).T  # dim × (bits·bands)
+    weights = np.array([1 << i for i in range(bits)], dtype=np.int64)
+    n_bands = bands
 
-        # annotations set explicitly: `from __future__ import annotations`
-        # stringifies inline hints, which pandas_udf cannot resolve
-        _sigs_fn.__annotations__ = {"v": pd.Series, "return": pd.Series}
-        sig_arr = F.pandas_udf(_sigs_fn, "array<long>")(F.col(vec_col))
-    else:
-        planes = planes_matrix(df.sparkSession, dim, bits, bands, seed)
-        df = df.crossJoin(F.broadcast(planes))
-        sig_arr = F.transform(
-            F.col("planes"), lambda bp: band_signature_col(F.col(vec_col), bp)
-        )
+    def _sigs_fn(v):
+        if len(v) == 0:
+            return pd.Series([], dtype=object)
+        mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
+        bitmat = (mat @ planes_t) >= 0  # n × bits·bands
+        sigs = bitmat.reshape(len(mat), n_bands, -1).astype(np.int64) @ weights
+        return pd.Series(list(sigs))
+
+    # annotations set explicitly: `from __future__ import annotations`
+    # stringifies inline hints, which pandas_udf cannot resolve
+    _sigs_fn.__annotations__ = {"v": pd.Series, "return": pd.Series}
+    sig_arr = F.pandas_udf(_sigs_fn, "array<long>")(F.col(vec_col))
     return df.select(
         F.col(id_col),
         F.col(vec_col),
@@ -283,7 +241,6 @@ def nearest_centroids(
     cent_id_col: str = "vec_id",
     cent_vec_col: str = "embedding",
     round_digits: int = 4,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """``(id_col, cent_id)`` — each vector's ``n`` nearest centroids by
     cosine, rounded to ``round_digits`` before ranking, ties broken on
@@ -291,69 +248,35 @@ def nearest_centroids(
     replicates).
 
     This is THE inner loop of centroid-based indexing (IVF build +
-    probe, SemDeDup clustering): dense matrix × small-matrix. Default
-    path collects the centroid set to the driver (contractually small —
-    same device as PQ codebooks) and runs an Arrow-batched numpy matmul
-    per partition: one BLAS call replaces |df|·k interpreted
-    higher-order-function cosines (~100× on dim-64 data). Fallback
-    (``use_arrow=False`` or numpy absent): broadcast-join + HOF cosine,
-    norms precomputed once per side rather than once per pair."""
-    if use_arrow:
-        try:
-            import numpy as np  # noqa: F401 - the kernel's dependency
-            import pandas as pd  # noqa: F401 - mapInPandas interface
-        except ImportError:  # pragma: no cover - numpy ships with pyspark
-            use_arrow = False
-    if use_arrow:
-        cent_ids, cmat = _centroid_matrix(
-            centroids.select(cent_id_col, cent_vec_col).collect()
-        )
-        spark = df.sparkSession
-        id_type = dict(df.dtypes)[id_col]
-        cent_type = dict(centroids.dtypes)[cent_id_col]
-        out_schema = f"{id_col} {id_type}, cent_id {cent_type}"
-        b_cids = spark.sparkContext.broadcast(cent_ids)
-        b_cmat = spark.sparkContext.broadcast(cmat)
-        top_n = n
+    probe, SemDeDup clustering): dense matrix × small-matrix. It
+    collects the centroid set to the driver (contractually small — same
+    device as PQ codebooks) and runs an Arrow-batched numpy matmul per
+    partition: one BLAS call replaces |df|·k interpreted
+    higher-order-function cosines (~100× on dim-64 data)."""
+    import pandas as pd
 
-        def _assign(batches):
-            cm = b_cmat.value
-            cid = b_cids.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                order = _nearest_rows(pdf[vec_col], cm, top_n, round_digits)
-                ids = pdf[id_col].to_numpy().repeat(order.shape[1])
-                yield pd.DataFrame(
-                    {id_col: ids, "cent_id": cid[order].ravel()}
-                )
+    cent_ids, cmat = _centroid_matrix(
+        centroids.select(cent_id_col, cent_vec_col).collect()
+    )
+    spark = df.sparkSession
+    id_type = dict(df.dtypes)[id_col]
+    cent_type = dict(centroids.dtypes)[cent_id_col]
+    out_schema = f"{id_col} {id_type}, cent_id {cent_type}"
+    b_cids = spark.sparkContext.broadcast(cent_ids)
+    b_cmat = spark.sparkContext.broadcast(cmat)
+    top_n = n
 
-        return df.select(id_col, vec_col).mapInPandas(_assign, out_schema)
-    cent = centroids.select(
-        F.col(cent_id_col).alias("cent_id"),
-        F.col(cent_vec_col).alias("_centvec"),
-        _norm(F.col(cent_vec_col)).alias("_cnrm"),
-    )
-    scored = (
-        df.select(id_col, vec_col)
-        .withColumn("_vnrm", _norm(F.col(vec_col)))
-        .crossJoin(F.broadcast(cent))
-        .select(
-            F.col(id_col),
-            "cent_id",
-            F.round(
-                _dot(F.col(vec_col), F.col("_centvec"))
-                / (F.col("_vnrm") * F.col("_cnrm")),
-                round_digits,
-            ).alias("_csim"),
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("_csim"), F.asc("cent_id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= n)
-        .select(id_col, "cent_id")
-    )
+    def _assign(batches):
+        cm = b_cmat.value
+        cid = b_cids.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            order = _nearest_rows(pdf[vec_col], cm, top_n, round_digits)
+            ids = pdf[id_col].to_numpy().repeat(order.shape[1])
+            yield pd.DataFrame({id_col: ids, "cent_id": cid[order].ravel()})
+
+    return df.select(id_col, vec_col).mapInPandas(_assign, out_schema)
 
 
 def ivf_topk(

@@ -39,9 +39,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from astro_sdk_spark.engine import drop_managed_table
 from astro_sdk_spark.operators.swap import swap_table
 from astro_sdk_spark.table import BaseTable, Table
-from astro_sdk_spark.templating import quote_identifier
 
 __all__ = ["publish_table"]
 
@@ -72,17 +72,10 @@ def publish_table(
     spark = spark or df.sparkSession
     staged = Table(name=f"{target.name}__wap_staged", metadata=target.metadata)
 
-    # The staging name is OWNED by this operator, so scrubbing an
-    # orphaned warehouse directory under it is safe — a killed previous
-    # run (or another session's metastore) leaves the location behind
-    # with no catalog entry, and managed-table creation then fails with
-    # LOCATION_ALREADY_EXISTS regardless of save mode.
-    if not spark.catalog.tableExists(staged.qualified_name):
-        from astro_sdk_spark.operators.swap import scrub_orphaned_location
-
-        scrub_orphaned_location(spark, staged.qualified_name)
-
-    df.write.mode("overwrite").format("parquet").saveAsTable(staged.qualified_name)
+    # the staging name is owned by this operator: whatever a killed
+    # earlier run left under it (table or orphaned location) goes
+    drop_managed_table(spark, staged.qualified_name)
+    df.write.format("parquet").saveAsTable(staged.qualified_name)
     try:
         if table_checks:
             check_table(staged, table_checks, spark=spark)
@@ -90,9 +83,7 @@ def publish_table(
             check_column(staged, column_checks, spark=spark)
     except Exception:
         if not keep_staging_on_fail:
-            spark.sql(
-                f"DROP TABLE IF EXISTS {quote_identifier(staged.qualified_name)}"
-            )
+            drop_managed_table(spark, staged.qualified_name)
         raise
     swap_table(spark, staged.qualified_name, target.qualified_name)
     from astro_sdk_spark.lineage import emit

@@ -1,6 +1,7 @@
-"""Table-swap helper shared by merge 'update' and ContinuousAggregate.refresh.
+"""Table swap: make a target table hold the contents of a staging table.
 
-Replaces a target table with the contents of a staging table. Mirrors the
+Used by every staged rewrite (merge 'update', SCD2, compaction,
+publish_table, the rollup and sketch stores). Mirrors the
 staged-rewrite finish step of the reference's Redshift merge strategy
 (``python-sdk/src/astro/databases/aws/redshift.py:169-307``) expressed for
 Spark's session catalog:
@@ -18,107 +19,12 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from astro_sdk_spark.engine import drop_managed_table
 from astro_sdk_spark.templating import quote_identifier
 
 
 def _database_of(qualified_name: str) -> str | None:
     return qualified_name.rsplit(".", 1)[0] if "." in qualified_name else None
-
-
-def location_is_partial_write(
-    spark: SparkSession, qualified_name: str, min_stale_s: float = 300.0
-) -> bool:
-    """True when the managed location for ``qualified_name`` exists but
-    holds only write-in-progress debris (``_temporary``, hidden/marker
-    files), NO committed data files, AND the debris is provably STALE —
-    the signature of a run killed mid-``saveAsTable``. Used by callers
-    that must self-heal a USER-supplied table name: scrubbing is only
-    safe when the directory provably isn't someone's data (an
-    operator-GENERATED staging name can skip this check and scrub
-    unconditionally). Missing directory → False (nothing to scrub).
-
-    The staleness guard matters because a CONCURRENT first-creation
-    ``saveAsTable`` by another session passes the marker-only shape test
-    while very much alive (``_temporary`` exists, no catalog entry until
-    commit): only when the newest mtime anywhere under the directory
-    (``_temporary`` contents included) is older than ``min_stale_s`` do
-    we call it dead. A live writer touches files continuously; a killed
-    one never will again."""
-    import os
-    import time
-
-    path = _managed_location(spark, qualified_name)
-    if path is None or not os.path.isdir(path):
-        return False
-    newest = os.path.getmtime(path)
-    for root, _dirs, files in os.walk(path):
-        for entry in os.listdir(root) if root == path else []:
-            if not entry.startswith(("_", ".")):
-                return False  # committed (or foreign) data file — not ours
-        for name in files:
-            try:
-                newest = max(newest, os.path.getmtime(os.path.join(root, name)))
-            except OSError:  # racing writer just moved/removed it → alive
-                return False
-        try:
-            newest = max(newest, os.path.getmtime(root))
-        except OSError:
-            return False
-    return (time.time() - newest) >= min_stale_s
-
-
-def _managed_location(spark: SparkSession, qualified_name: str) -> str | None:
-    """Local-filesystem managed location for a (possibly unqualified)
-    table name, resolved through the catalog's database metadata with a
-    default-layout fallback; None for remote warehouses."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    db, _, table = qualified_name.rpartition(".")
-    if not db:
-        db = spark.catalog.currentDatabase()
-    base = None
-    try:
-        loc = urlparse(spark.catalog.getDatabase(db).locationUri)
-        if loc.scheme not in ("", "file"):
-            return None  # remote warehouse — leave orphan handling to the catalog
-        base = unquote(loc.path or loc.netloc)
-    except Exception:  # noqa: BLE001 - catalog lookup is best-effort
-        pass
-    if not base:
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
-        if wh.scheme not in ("", "file"):
-            return None
-        base = unquote(wh.path or wh.netloc)
-        if db and db.lower() != "default":
-            base = os.path.join(base, f"{db.lower()}.db")
-    return os.path.join(base, table.lower())
-
-
-def scrub_orphaned_location(spark: SparkSession, qualified_name: str) -> None:
-    """Remove a leftover managed-table DIRECTORY for a staging name its
-    caller owns: a run killed between ``saveAsTable(staging)`` and the
-    swap leaves the location behind with no catalog entry (a fresh
-    session's ``DROP TABLE IF EXISTS`` no-ops), and the next managed
-    write would die with LOCATION_ALREADY_EXISTS. Only safe for names the
-    operator generates itself. Local/file warehouses only; unqualified
-    names resolve against the session's CURRENT database, exactly as
-    ``saveAsTable`` does.
-
-    The managed location is resolved through the catalog's DATABASE
-    metadata (``spark.catalog.getDatabase(...).locationUri``, with URI
-    percent-encoding unquoted), so a database created with a custom
-    ``LOCATION`` scrubs correctly; only when the catalog lookup itself
-    fails does the default-layout heuristic (``<wh>/<table>`` in
-    default, ``<wh>/<db>.db/<table>`` elsewhere) apply. Callers healing
-    a USER-supplied name must gate on
-    :func:`location_is_partial_write` first — this function deletes
-    unconditionally."""
-    import shutil
-
-    path = _managed_location(spark, qualified_name)
-    if path is not None:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 def _write_back(spark: SparkSession, staging_qname: str, target_qname: str) -> None:
@@ -151,7 +57,8 @@ def swap_table(spark: SparkSession, staging_qname: str, target_qname: str) -> No
     except Exception:  # noqa: BLE001 - non-partitioned tables raise
         partitioned = False
     try:
-        spark.sql(f"DROP TABLE IF EXISTS {tq}")
+        # an orphaned target location would make the RENAME fail
+        drop_managed_table(spark, target_qname)
         spark.sql(f"ALTER TABLE {sq} RENAME TO {tq}")
     except Exception:
         # If the target was dropped but the rename failed, the staged result

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from astro_sdk_spark.engine import drop_managed_table
 from astro_sdk_spark.functions.dedup import exact_dedup, minhash_near_dup, simhash_near_dup
 from astro_sdk_spark.functions.similarity import ann_recall, cosine_topk, lsh_bucket_join
 from astro_sdk_spark.functions.text import (
@@ -3442,24 +3443,6 @@ _TRANSFORM_CTAS_ORACLE = """
 """
 
 
-def _drop_table_and_location(spark: SparkSession, name: str) -> None:
-    """DROP TABLE IF EXISTS plus orphaned-location cleanup: a managed
-    table written by a PREVIOUS session leaves its warehouse directory
-    behind while the new session's in-memory catalog has never heard of
-    it — saveAsTable then fails with LOCATION_ALREADY_EXISTS. Only
-    local-filesystem warehouses are scrubbed (the only kind in this
-    environment); remote schemes are left to the catalog."""
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    import shutil
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
-    if wh.scheme in ("", "file"):
-        shutil.rmtree(
-            os.path.join(wh.path or wh.netloc, name.lower()), ignore_errors=True
-        )
-
-
 @q("q_transform_ctas", _TRANSFORM_CTAS_ORACLE)
 def q_transform_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """transform → CTAS → read-back (operators/transform.py:run_transform,
@@ -3473,8 +3456,6 @@ def q_transform_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     from astro_sdk_spark.table import Table
 
     eng = SparkEngine(spark)
-    _drop_table_and_location(spark, "q_ctas_orders_src")
-    _drop_table_and_location(spark, "q_ctas_orders_agg")
     src = Table(name="q_ctas_orders_src")
     load_file(File(f"{sf_dir}/orders.parquet"), src, engine=eng)
     out = run_transform(
@@ -3511,8 +3492,6 @@ def q_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     (non-empty + no null keys), swap it live, read it back."""
     from astro_sdk_spark.operators.publish import publish_table
 
-    _drop_table_and_location(spark, "q_publish_tgt")
-    _drop_table_and_location(spark, "q_publish_tgt__wap_staged")
     li = T(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_items"),
@@ -3754,7 +3733,7 @@ def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = T(spark, sf_dir, "events")
     tbl = "q_rollup_events_agg"
-    _drop_table_and_location(spark, tbl)
+    drop_managed_table(spark, tbl)
     lo, hi = e.agg(F.min("ts"), F.max("ts")).collect()[0]
     if lo is None:  # empty source: single full build, no split refresh
         mid = None
@@ -4034,8 +4013,7 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     eng = SparkEngine(spark)
     tbl = "q_compact_orders"
-    _drop_table_and_location(spark, tbl)
-    _drop_table_and_location(spark, tbl + "__compact_staging")
+    drop_managed_table(spark, tbl)
     T(spark, sf_dir, "orders").repartition(16).write.saveAsTable(tbl)
     stats = eng.compact_table(
         Table(name=tbl), target_file_mb=256, sort_by=["o_orderkey"]
@@ -5705,8 +5683,7 @@ def q_stream_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from astro_sdk_spark.streaming.testing import stage_microbatch_files
 
     tbl = "q_stream_grp_qsk"
-    _drop_table_and_location(spark, tbl)
-    # the store scrubs its own __sketch_staging orphans (operators/swap.py)
+    drop_managed_table(spark, tbl)
     work = tempfile.mkdtemp(prefix="q_stream_grp_")
     try:
         src = stage_microbatch_files(
@@ -5964,7 +5941,7 @@ def q_stream_group_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from astro_sdk_spark.streaming.testing import stage_microbatch_files
 
     tbl = "q_stream_grp_cms"
-    _drop_table_and_location(spark, tbl)
+    drop_managed_table(spark, tbl)
     work = tempfile.mkdtemp(prefix="q_stream_grp_cms_")
     try:
         src = stage_microbatch_files(

@@ -182,27 +182,28 @@ def merge_sketch_batch(
         )
         for p, v in params.items():
             out = out.withColumn(f"_{p}", F.lit(v))
-        from astro_sdk_spark.operators.swap import (
+        from astro_sdk_spark.engine import (
+            drop_managed_table,
             location_is_partial_write,
-            scrub_orphaned_location,
-            swap_table,
+            refuse_orphaned_location,
         )
+        from astro_sdk_spark.operators.swap import swap_table
 
         if spark.catalog.tableExists(sketch_table):
+            # staging is an operator-generated name: drop whatever is there
             staging = f"{sketch_table}__sketch_staging"
-            spark.sql(f"DROP TABLE IF EXISTS {staging}")
-            # staging is an operator-GENERATED name: unconditional scrub
-            scrub_orphaned_location(spark, staging)
+            drop_managed_table(spark, staging)
             out.write.format("parquet").saveAsTable(staging)
             swap_table(spark, staging, sketch_table)
         else:
             # first creation of a USER-supplied name: self-heal ONLY when
             # the location holds partial-write debris of a killed run
             # (_temporary / markers, zero committed files). A directory
-            # with real data files is NOT ours to delete — let
-            # saveAsTable fail loudly with LOCATION_ALREADY_EXISTS.
+            # with real data files is NOT ours to delete.
             if location_is_partial_write(spark, sketch_table):
-                scrub_orphaned_location(spark, sketch_table)
+                drop_managed_table(spark, sketch_table)
+            else:
+                refuse_orphaned_location(spark, sketch_table)
             out.write.format("parquet").saveAsTable(sketch_table)
     finally:
         # free the checkpoint blocks NOW: a long-running ingest would

@@ -45,22 +45,8 @@ def nightly_report(spark: SparkSession, sf_dir: str) -> dict:
     from astro_sdk_spark.table import Table
 
     eng = SparkEngine(spark)
-    for t in ("rpt_orders", "rpt_lineitem", "rpt_stage", "rpt_revenue",
-              "rpt_revenue__wap_staged"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        # scrub orphaned warehouse directories too: a managed table
-        # written by a PREVIOUS session (a killed run, another
-        # metastore) leaves its location behind while this session's
-        # catalog has never heard of it — saveAsTable then fails with
-        # LOCATION_ALREADY_EXISTS
-        import shutil
-        from urllib.parse import urlparse
-
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
-        if wh.scheme in ("", "file"):
-            shutil.rmtree(
-                os.path.join(wh.path or wh.netloc, t.lower()), ignore_errors=True
-            )
+    # every writer below replaces its table, and clears what a killed
+    # earlier run left under the name (SparkEngine's location policy)
 
     # 1. ELT load: files into managed tables
     orders = Table(name="rpt_orders")

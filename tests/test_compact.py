@@ -117,30 +117,53 @@ def test_compact_single_partition_leaves_others_untouched(spark, engine, part_ta
     assert parts == ["p"]
 
 
-def test_vacuum_orphans_removes_only_unregistered_dirs(spark, engine):
+@pytest.mark.parametrize("db", ["default", "vac_other", "vac_custom"])
+def test_vacuum_orphans_removes_only_unregistered_dirs(spark, engine, db):
+    """Vacuum from ``db`` removes the orphan in ``db``'s own location and
+    nothing live: not its tables, not another database's tables (a
+    default-database table must survive a vacuum run from ``vac_other``),
+    and not a custom-``LOCATION`` database's directory inside the
+    warehouse."""
     wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    root = wh.removeprefix("file:")
-    os.makedirs(root, exist_ok=True)
-    # a live table and an orphaned location
-    spark.sql("DROP TABLE IF EXISTS vac_live_t")
-    shutil.rmtree(os.path.join(root, "vac_live_t"), ignore_errors=True)
-    spark.range(5).write.saveAsTable("vac_live_t")
+    wh = wh.removeprefix("file:")
+    custom_root = os.path.join(wh, "vac custom loc")  # space: URI unquoting
+    roots = {
+        "default": wh,
+        "vac_other": os.path.join(wh, "vac_other.db"),
+        "vac_custom": custom_root,
+    }
+    spark.sql("CREATE DATABASE IF NOT EXISTS vac_other")
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS vac_custom LOCATION '{custom_root}'")
+    # a live table in each database, and an orphaned location in db's
+    for d in roots:
+        spark.sql(f"DROP TABLE IF EXISTS {d}.vac_live_t")
+        shutil.rmtree(os.path.join(roots[d], "vac_live_t"), ignore_errors=True)
+        spark.range(5).write.saveAsTable(f"{d}.vac_live_t")
+    root = roots[db]
     orphan = os.path.join(root, "vac_orphan_t")
     os.makedirs(orphan, exist_ok=True)
     open(os.path.join(orphan, "part-000.parquet"), "wb").write(b"junk")
+    spark.catalog.setCurrentDatabase(db)
     try:
-        would = engine.vacuum_orphans(dry_run=True)
-        assert orphan in would
+        would = {os.path.realpath(p) for p in engine.vacuum_orphans(dry_run=True)}
+        assert os.path.realpath(orphan) in would
         assert os.path.isdir(orphan)  # dry run touches nothing
-        removed = engine.vacuum_orphans()
-        assert orphan in removed
+        removed = {os.path.realpath(p) for p in engine.vacuum_orphans()}
+        assert os.path.realpath(orphan) in removed
         assert not os.path.exists(orphan)
-        # the live table survived, both dir and content
-        assert spark.table("vac_live_t").count() == 5
-        assert os.path.isdir(os.path.join(root, "vac_live_t"))
+        # every live table survived, both dir and content
+        for d, r in roots.items():
+            assert spark.table(f"{d}.vac_live_t").count() == 5
+            assert os.path.isdir(os.path.join(r, "vac_live_t"))
+        assert os.path.isdir(custom_root)
     finally:
-        spark.sql("DROP TABLE IF EXISTS vac_live_t")
+        spark.catalog.setCurrentDatabase("default")
+        for d in roots:
+            spark.sql(f"DROP TABLE IF EXISTS {d}.vac_live_t")
+        spark.sql("DROP DATABASE IF EXISTS vac_other")
+        spark.sql("DROP DATABASE IF EXISTS vac_custom")
         shutil.rmtree(orphan, ignore_errors=True)
+        shutil.rmtree(custom_root, ignore_errors=True)
 
 
 def test_file_skip_report_shows_clustering_payoff(spark, engine, demo_table):

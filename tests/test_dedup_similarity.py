@@ -23,11 +23,13 @@ from astro_sdk_spark.functions.dedup import (
     simhash_signatures,
 )
 from astro_sdk_spark.functions.similarity import (
+    _dot,
     ann_recall,
     banded_signatures,
     cosine_topk,
     ivf_topk,
     lsh_bucket_join,
+    random_hyperplanes,
     train_centroids,
 )
 
@@ -170,14 +172,39 @@ def test_lsh_bucket_join_subset_of_bruteforce(vectors):
     assert all(0.0 <= r.recall <= 1.0 for r in rec)
 
 
+def _hof_banded_signatures(df, dim, bits, bands, seed=42):
+    """Reference for banded_signatures in built-in higher-order functions
+    (JVM-side, no numpy): one broadcast planes[band][bit][dim] column,
+    bit i of a band = sign(dot(v, plane_i)), packed into a long."""
+    flat = random_hyperplanes(dim, bits * bands, seed)
+    nested = [[flat[b * bits + i] for i in range(bits)] for b in range(bands)]
+    planes = df.sparkSession.createDataFrame(
+        [(nested,)], "planes array<array<array<double>>>"
+    )
+
+    def band_sig(band_planes):
+        bit_terms = F.transform(
+            band_planes,
+            lambda p, i: F.when(
+                _dot(F.col("embedding"), p) >= 0,
+                F.pow(F.lit(2.0), i.cast("double")).cast("long"),
+            ).otherwise(F.lit(0).cast("long")),
+        )
+        return F.aggregate(bit_terms, F.lit(0).cast("long"), lambda a, v: a + v)
+
+    return df.crossJoin(F.broadcast(planes)).select(
+        "vec_id", F.posexplode(F.transform("planes", band_sig)).alias("band", "sig")
+    )
+
+
 def test_banded_signatures_arrow_and_hof_paths_match(vectors):
     arrow = {
         (r.vec_id, r.band): r.sig
-        for r in banded_signatures(vectors, 16, bits=6, bands=3, use_arrow=True).collect()
+        for r in banded_signatures(vectors, 16, bits=6, bands=3).collect()
     }
     hof = {
         (r.vec_id, r.band): r.sig
-        for r in banded_signatures(vectors, 16, bits=6, bands=3, use_arrow=False).collect()
+        for r in _hof_banded_signatures(vectors, 16, bits=6, bands=3).collect()
     }
     assert arrow == hof
 

@@ -79,45 +79,3 @@ def test_publish_emits_lineage(spark):
     evs = [e for e in LINEAGE.events() if e.op == "publish_table"]
     assert evs and evs[-1].outputs == ["wap_lin"]
     _drop(spark, "wap_lin")
-
-
-def test_publish_recovers_from_orphaned_staging_dir(spark, tmp_path):
-    """A killed previous run leaves the staging DIRECTORY behind with no
-    catalog entry — the next publish must scrub it instead of dying on
-    LOCATION_ALREADY_EXISTS."""
-    import os
-    from urllib.parse import urlparse
-
-    _drop(spark, "wap_orph", "wap_orph__wap_staged")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
-    orphan = os.path.join(wh.path or wh.netloc, "wap_orph__wap_staged")
-    os.makedirs(orphan, exist_ok=True)
-    open(os.path.join(orphan, "junk"), "w").write("leftover")
-    publish_table(spark.range(3), "wap_orph")
-    assert spark.table("wap_orph").count() == 3
-    _drop(spark, "wap_orph")
-
-
-def test_publish_recovers_orphan_in_named_database(spark, tmp_path):
-    """Same orphaned-staging recovery for a SCHEMA-QUALIFIED target: the
-    managed layout there is <warehouse>/<db>.db/<table>, which the scrub
-    used to miss (it joined the warehouse root with the bare name)."""
-    import os
-    from urllib.parse import urlparse
-
-    from astro_sdk_spark.table import Metadata, Table
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS wapdb")
-    spark.sql("DROP TABLE IF EXISTS wapdb.wap_qual")
-    spark.sql("DROP TABLE IF EXISTS wapdb.wap_qual__wap_staged")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
-    orphan = os.path.join(
-        wh.path or wh.netloc, "wapdb.db", "wap_qual__wap_staged"
-    )
-    os.makedirs(orphan, exist_ok=True)
-    open(os.path.join(orphan, "junk"), "w").write("leftover")
-    tgt = Table(name="wap_qual", metadata=Metadata(schema="wapdb"))
-    publish_table(spark.range(7), tgt)
-    assert spark.table("wapdb.wap_qual").count() == 7
-    spark.sql("DROP TABLE IF EXISTS wapdb.wap_qual")
-    spark.sql("DROP DATABASE IF EXISTS wapdb")

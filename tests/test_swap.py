@@ -112,12 +112,9 @@ def test_location_is_partial_write_discriminates(spark, tmp_path):
     writer is dead)."""
     import os
 
-    from astro_sdk_spark.operators.swap import (
-        _managed_location,
-        location_is_partial_write,
-    )
+    from astro_sdk_spark.engine import location_is_partial_write, managed_location
 
-    loc = _managed_location(spark, "gate_probe_t")
+    loc = managed_location(spark, "gate_probe_t")
     assert loc is not None
     # absent -> False
     assert location_is_partial_write(spark, "gate_probe_t") is False
@@ -160,24 +157,21 @@ def test_scrub_resolves_custom_location_database(spark, tmp_path):
     default <warehouse>/<db>.db layout."""
     import os
 
-    from astro_sdk_spark.operators.swap import (
-        _managed_location,
-        scrub_orphaned_location,
-    )
+    from astro_sdk_spark.engine import drop_managed_table, managed_location
 
     loc_root = str(tmp_path / "custom wh")  # space: exercises %20 unquoting
     spark.sql(
         f"CREATE DATABASE IF NOT EXISTS scrubdb LOCATION '{loc_root}'"
     )
     try:
-        resolved = _managed_location(spark, "scrubdb.orph_t")
+        resolved = managed_location(spark, "scrubdb.orph_t")
         assert resolved is not None
         assert os.path.normpath(resolved) == os.path.normpath(
             os.path.join(loc_root, "orph_t")
         ), resolved
         # plant an orphan directory at the custom location and scrub it
         os.makedirs(os.path.join(resolved, "_temporary"), exist_ok=True)
-        scrub_orphaned_location(spark, "scrubdb.orph_t")
+        drop_managed_table(spark, "scrubdb.orph_t")
         assert not os.path.exists(resolved)
         # end-to-end: a managed write into the custom-location db succeeds
         spark.createDataFrame([(1,)], "x int").write.saveAsTable("scrubdb.orph_t")
