@@ -3,18 +3,11 @@
 from astro_sdk_spark.multimodal.codecs import (
     decode_bmp,
     decode_gif,
-    decode_jpeg,
     decode_png,
     decode_wav,
     encode_png,
     resize_nearest,
 )
-from astro_sdk_spark.multimodal.avi import (
-    avi_frames,
-    avi_metadata,
-    write_avi_mjpeg,
-)
-from astro_sdk_spark.multimodal.jpeg import encode_jpeg
 from astro_sdk_spark.multimodal.ops import (
     MEDIA_SCHEMA,
     attach_media_metadata,
@@ -39,13 +32,8 @@ __all__ = [
     "encode_png",
     "decode_bmp",
     "decode_gif",
-    "decode_jpeg",
-    "encode_jpeg",
     "decode_wav",
     "resize_nearest",
-    "avi_frames",
-    "avi_metadata",
-    "write_avi_mjpeg",
     "extract_image_features",
     "extract_audio_features",
     "image_phash_batch",

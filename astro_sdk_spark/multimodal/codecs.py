@@ -1,15 +1,12 @@
 """Real, dependency-free media codecs (stdlib + numpy only).
 
-The container has no Pillow/librosa/av, but PNG, uncompressed BMP, WAV,
-baseline+progressive JPEG (``multimodal.jpeg`` — a pure-numpy T.81
-codec), GIF, and both WebP flavors (``multimodal.vp8l`` lossless,
-``multimodal.vp8`` lossy intra-frame — the latter verified bit-exact
-against libwebp) are fully decodable with ``zlib``/``struct``/``wave``
-+ numpy — and arithmetic-coded JPEG, sequential and progressive
-(``multimodal.jpeg_arith``, QM-coder), decodes too — so the
-decode/resize stages in ``multimodal.ops`` are REAL for these formats;
-only codecs that require external libraries (lossless JPEG, MP3,
-H.264, …) remain env-gated behind NotImplementedError.
+Pillow/librosa/av are not dependencies, so the decoders here are the ones
+``zlib``/``struct``/``wave`` + numpy can carry cheaply: PNG (8-bit, all
+filters, palette, Adam7), uncompressed BMP, GIF (full LZW, interlace,
+transparency, animation compositing) and PCM WAV. Every other format —
+JPEG, WebP, MP3, H.264, … — is recognised by magic bytes where useful but
+not decoded; ``multimodal.ops`` routes it through the ``on_unsupported``
+gate (error | stub | skip | passthrough).
 
 Throughput note: these codecs favor clarity over speed (the PNG unfilter
 walks filtered rows byte-wise); at production scale swap the per-blob
@@ -223,7 +220,8 @@ def resize_nearest(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
 
 
 def sniff_image(blob: bytes) -> str | None:
-    """Magic-byte sniff for the formats the built-in codecs handle."""
+    """Magic-byte sniff for still-image formats. JPEG and WebP are named
+    so callers can report them, but only PNG/BMP/GIF decode here."""
     if blob[:8] == PNG_SIG:
         return "png"
     if blob[:2] == b"BM":
@@ -235,24 +233,6 @@ def sniff_image(blob: bytes) -> str | None:
     if blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
         return "webp"
     return None
-
-
-def decode_jpeg(blob: bytes) -> np.ndarray:
-    """JPEG → (H, W, C) uint8; see ``multimodal.jpeg`` (pure numpy T.81
-    codec: baseline SOF0/1, progressive SOF2, arithmetic SOF9/SOF10 —
-    lossless/hierarchical raise NotImplementedError)."""
-    from astro_sdk_spark.multimodal.jpeg import decode_jpeg as _dec
-
-    return _dec(blob)
-
-
-def decode_webp(blob: bytes) -> np.ndarray:
-    """WebP → (H, W, 3|4) uint8; lossless via ``multimodal.vp8l``,
-    lossy intra-frame via ``multimodal.vp8`` (both pure python —
-    animation raises NotImplementedError)."""
-    from astro_sdk_spark.multimodal.vp8l import decode_webp as _dec
-
-    return _dec(blob)
 
 
 def decode_gif(blob: bytes) -> np.ndarray:
@@ -340,10 +320,9 @@ def decode_gif_frames(blob: bytes):
     """Animated (or still) GIF → (frames, delays_ms): composited
     (H, W, 4) canvases per the GIF89a model — graphic-control disposal
     (keep / restore-to-background / restore-to-previous), per-frame
-    transparency, local palettes, interlace. Mirrors
-    ``vp8l.decode_webp_frames``; restore-to-background clears to fully
-    transparent (the modern-decoder convention rather than the literal
-    background index)."""
+    transparency, local palettes, interlace. Restore-to-background
+    clears to fully transparent (the modern-decoder convention rather
+    than the literal background index)."""
     blob = bytes(blob)
     if blob[:4] != b"GIF8" or blob[4:6] not in (b"7a", b"9a"):
         raise ValueError("not a GIF (bad signature)")

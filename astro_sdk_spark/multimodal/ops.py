@@ -1,14 +1,14 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata, processed via Arrow-batched pandas UDFs.
 
-Decode is REAL for PNG, uncompressed BMP, GIF, baseline AND progressive
-JPEG, and WAV via the stdlib+numpy codecs in ``multimodal.codecs`` /
-``multimodal.jpeg`` (decode, pixel resize + PNG re-encode, perceptual
-hashing, PCM samples, spectral fingerprints); formats whose codecs need
-external libraries absent from this container (WebP, MP3, H.264, …) raise
-NotImplementedError unless the caller opts into ``on_unsupported="stub"``
-(deterministic fake dims) or ``"skip"``. Swapping in Pillow/turbojpeg
-changes one per-blob function, not the pipeline.
+Decode is REAL for PNG, uncompressed BMP, GIF (incl. animation) and WAV
+via the stdlib+numpy codecs in ``multimodal.codecs`` (decode, pixel resize
++ PNG re-encode, perceptual hashing, PCM samples, spectral fingerprints).
+Every other format (JPEG, WebP, MP3, H.264, …) and every corrupt blob
+raises unless the caller opts into ``on_unsupported="stub"``
+(deterministic fake dims), ``"skip"`` or, for resize, ``"passthrough"``.
+Swapping in Pillow/turbojpeg changes one per-blob function
+(:func:`_decode_image_array`), not the pipeline.
 
 Scale notes:
 - ``spark.read.format("binaryFile")`` splits per file across executors;
@@ -96,11 +96,11 @@ def _decode_image_stub(blob: bytes) -> tuple[int, int, int]:
 def _decode_image_array(blob: bytes):
     """(H, W, C) array via the built-in codecs, dispatched on magic bytes.
 
-    Raises NotImplementedError for formats (or in-format variants —
-    arithmetic JPEG, 16-bit PNG, compressed BMP) the codecs gate, and
+    Raises NotImplementedError for formats (JPEG, WebP, …) or in-format
+    variants (16-bit PNG, compressed BMP) the codecs gate, and
     ValueError/other errors for corrupt data in a supported format. The
-    ONE dispatch site shared by decode/resize/phash so the format list
-    can't drift between them."""
+    ONE dispatch site shared by decode/resize/phash/features so the
+    format list can't drift between them."""
     from astro_sdk_spark.multimodal import codecs
 
     fmt = codecs.sniff_image(blob)
@@ -108,16 +108,12 @@ def _decode_image_array(blob: bytes):
         return codecs.decode_png(blob)
     if fmt == "bmp":
         return codecs.decode_bmp(blob)
-    if fmt == "jpeg":
-        return codecs.decode_jpeg(blob)
     if fmt == "gif":
         return codecs.decode_gif(blob)
-    if fmt == "webp":
-        return codecs.decode_webp(blob)
     raise NotImplementedError(
-        "built-in codecs decode PNG/BMP/GIF/JPEG (baseline+progressive)/"
-        "WebP (lossless VP8L) only; lossy-VP8 WebP needs Pillow (absent "
-        "in this env) — pass a non-'error' on_unsupported to proceed"
+        "built-in codecs decode PNG/BMP/GIF only; JPEG, WebP and other "
+        "formats need an external codec such as Pillow — pass a "
+        "non-'error' on_unsupported to proceed"
     )
 
 
@@ -146,8 +142,10 @@ def decode_image_batch(
     on_unsupported: str = "error",
 ) -> DataFrame:
     """mapInPandas decode → (id, width, height, channels). Real decode for
-    PNG/BMP (``multimodal.codecs``); the UDF sees Arrow batches of binary
-    blobs — the real-world shape for GPU/CPU decode stages."""
+    PNG/BMP/GIF (``multimodal.codecs``); other formats and corrupt blobs
+    follow ``on_unsupported``: error | stub | skip. The UDF sees Arrow
+    batches of binary blobs — the real-world shape for GPU/CPU decode
+    stages."""
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -168,6 +166,26 @@ def decode_image_batch(
     return df.select(id_col, content_col).mapInPandas(_decode, schema=schema)
 
 
+def _decode_audio(blob: bytes, on_unsupported: str):
+    """(sample_rate, samples) for a WAV blob; otherwise ``on_unsupported``
+    decides: 'skip' returns None, anything else raises. As for images,
+    'skip' absorbs both unsupported formats and corrupt WAVs (cut off in
+    the header or mid-sample)."""
+    from astro_sdk_spark.multimodal import codecs
+
+    try:
+        if blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
+            raise NotImplementedError(
+                "built-in codec decodes WAV only; mp3/flac/ogg need "
+                "external libs — pass on_unsupported='skip'"
+            )
+        return codecs.decode_wav(blob)
+    except Exception:  # noqa: BLE001 - unsupported OR corrupt, same policy
+        if on_unsupported == "skip":
+            return None
+        raise
+
+
 def decode_audio_batch(
     df: DataFrame,
     content_col: str = "content",
@@ -176,24 +194,18 @@ def decode_audio_batch(
 ) -> DataFrame:
     """mapInPandas audio decode → (id, sample_rate, n_channels, n_frames,
     duration_s). Real for WAV/PCM (stdlib ``wave``); MP3/FLAC/OGG need
-    external codecs — ``on_unsupported='skip'`` drops them."""
+    external codecs. ``on_unsupported='skip'`` drops them and corrupt
+    WAVs; 'error' raises."""
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from astro_sdk_spark.multimodal import codecs
-
         for pdf in batches:
             out = {k: [] for k in (id_col, "sample_rate", "n_channels",
                                    "n_frames", "duration_s")}
             for pid, b in zip(pdf[id_col], pdf[content_col]):
-                blob = bytes(b or b"")
-                if blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-                    if on_unsupported == "skip":
-                        continue
-                    raise NotImplementedError(
-                        "built-in codec decodes WAV only; mp3/flac/ogg need "
-                        "external libs — pass on_unsupported='skip'"
-                    )
-                sr, samples = codecs.decode_wav(blob)
+                decoded = _decode_audio(bytes(b or b""), on_unsupported)
+                if decoded is None:
+                    continue
+                sr, samples = decoded
                 out[id_col].append(pid)
                 out["sample_rate"].append(sr)
                 out["n_channels"].append(samples.shape[1])
@@ -213,12 +225,13 @@ def extract_image_features(
 ) -> DataFrame:
     """Fixed-dim float vector per blob, all values in [0, 1].
 
-    Decodable images (PNG/BMP) get REAL pixel features — per-channel
-    mean and clipped std, then a normalized grayscale histogram filling
-    the remaining slots. Other blobs get deterministic sha256-derived
-    pseudo-features (documented fallback so mixed-format tables keep one
-    vector space). A learned encoder slots into the same mapInPandas
-    contract, typically with GPU batching."""
+    Images the shared dispatch decodes (PNG/BMP/GIF) get REAL pixel
+    features — per-channel mean and clipped std, then a normalized
+    grayscale histogram filling the remaining slots. Every other blob,
+    unsupported format or corrupt data alike, gets deterministic
+    sha256-derived pseudo-features (documented fallback so mixed-format
+    tables keep one vector space). A learned encoder slots into the same
+    mapInPandas contract, typically with GPU batching."""
 
     def _pixel_features(arr, k: int) -> list[float]:
         import numpy as np
@@ -236,20 +249,17 @@ def extract_image_features(
         return feats
 
     def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from astro_sdk_spark.multimodal import codecs
-
         for pdf in batches:
             feats = []
             for b in pdf[content_col]:
                 blob = bytes(b or b"")
-                fmt = codecs.sniff_image(blob)
-                if fmt == "png":
-                    feats.append(_pixel_features(codecs.decode_png(blob), dim))
-                elif fmt == "bmp":
-                    feats.append(_pixel_features(codecs.decode_bmp(blob), dim))
-                else:
+                try:
+                    arr = _decode_image_array(blob)
+                except Exception:  # noqa: BLE001 - unsupported OR corrupt
                     h = hashlib.sha256(blob).digest()
                     feats.append([h[i] / 255.0 for i in range(dim)])
+                else:
+                    feats.append(_pixel_features(arr, dim))
             yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
 
     return df.select(id_col, content_col).mapInPandas(
@@ -265,12 +275,12 @@ def resize_images(
     id_col: str = "path",
     on_unsupported: str = "error",
 ) -> DataFrame:
-    """Real resize for PNG/BMP/baseline-JPEG: decode → nearest-neighbor
-    resample → re-encode as PNG (output blobs are valid PNGs of the
-    target size). Unsupported formats follow ``on_unsupported``: error |
-    passthrough | skip ("passthrough" emits the original bytes with the
-    recorded target shape — the old stub behavior, for mixed-format
-    tables)."""
+    """Real resize for PNG/BMP/GIF: decode → nearest-neighbor resample →
+    re-encode as PNG (output blobs are valid PNGs of the target size).
+    Other formats (JPEG, WebP, …) and corrupt blobs follow
+    ``on_unsupported``: error | passthrough | skip ("passthrough" emits
+    the original bytes with the recorded target shape — the old stub
+    behavior, for mixed-format tables)."""
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from astro_sdk_spark.multimodal import codecs
@@ -319,47 +329,24 @@ def frame_sample_video(
     row explodes into ≤``max_frames`` output rows, the exploded layout
     downstream image ops consume.
 
-    AVI/MJPEG blobs take the REAL path (``multimodal.avi``): every
-    ``every_n``-th video frame is sliced out of the container by chunk
-    offset (the rest of the blob is never materialized) and emitted as a
-    standalone baseline-JPEG blob — feed the frames straight to
-    :func:`decode_image_batch` / :func:`image_phash_batch`;
-    ``frame_idx`` is the frame number. Animated WebP is REAL too:
-    frames are composited per the container spec (blend/dispose state
-    means every frame up to the last sampled one must be decoded) and
-    re-emitted as standalone PNG blobs. Containers without a stdlib
-    parser (mp4/h264/mkv) keep the deterministic byte-slice stub with
+    Animated (or still) GIF takes the REAL path: frames are composited
+    per GIF89a (disposal state means every frame up to the last sampled
+    one must be decoded) and re-emitted as standalone PNG blobs — feed
+    them straight to :func:`decode_image_batch` /
+    :func:`image_phash_batch`; ``frame_idx`` is the frame number. Every
+    other container (mp4, avi, mkv, animated WebP, …) has no built-in
+    decoder and keeps the deterministic byte-slice stub with
     ``frame_idx`` as a byte offset — honestly fake, shape-correct."""
 
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from astro_sdk_spark.multimodal.avi import avi_frame_offsets, is_avi
+        from astro_sdk_spark.multimodal import codecs
 
         for pdf in batches:
             ids, idxs, frames = [], [], []
             for pid, b in zip(pdf[id_col], pdf[content_col]):
                 blob = bytes(b or b"")
-                if is_avi(blob):
-                    offs = avi_frame_offsets(blob)
-                    for i in range(0, len(offs), max(every_n, 1))[:max_frames]:
-                        o, s = offs[i]
-                        ids.append(pid)
-                        idxs.append(i)
-                        frames.append(blob[o : o + s])
-                    continue
-                anim_webp = (blob[:4] == b"RIFF" and blob[8:12] == b"WEBP"
-                             and b"ANMF" in blob)
-                anim_gif = blob[:4] == b"GIF8"
-                if anim_webp or anim_gif:
-                    from astro_sdk_spark.multimodal import codecs
-
-                    if anim_webp:
-                        from astro_sdk_spark.multimodal.vp8l import (
-                            decode_webp_frames,
-                        )
-
-                        composited, _durs = decode_webp_frames(blob)
-                    else:
-                        composited, _durs = codecs.decode_gif_frames(blob)
+                if codecs.sniff_image(blob) == "gif":
+                    composited, _delays = codecs.decode_gif_frames(blob)
                     for i in range(0, len(composited),
                                    max(every_n, 1))[:max_frames]:
                         ids.append(pid)
@@ -387,18 +374,17 @@ def image_phash_batch(
     """Perceptual image hash (classic DCT pHash) per blob →
     ``(id, phash long)``.
 
-    decode → grayscale → 32×32 area resample → 2D DCT (the same basis as
-    the JPEG codec) → low-frequency 8×8 corner (DC excluded) → 64-bit
+    decode → grayscale → 32×32 area resample → orthonormal 2D DCT-II →
+    low-frequency 8×8 corner (DC excluded) → 64-bit
     sign-vs-median hash. Perceptually-similar images (re-encodes,
     resizes, small edits) land within a few Hamming bits — feed
     :func:`phash_near_dup` to find them without comparing pixels.
-    Unsupported/gated formats follow ``on_unsupported`` (error | skip)."""
+    Images decode through the same dispatch as :func:`decode_image_batch`
+    (PNG/BMP/GIF); other formats (JPEG, WebP, …) and corrupt blobs follow
+    ``on_unsupported`` (error | skip)."""
 
     def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
-
-        from astro_sdk_spark.multimodal import codecs
-        from astro_sdk_spark.multimodal.jpeg import _C
 
         c32 = np.zeros((32, 32))
         for k in range(32):
@@ -513,12 +499,11 @@ def extract_audio_features(
     :func:`extract_image_features`: a fixed-dim vector suitable for
     embedding-style dedup/similarity over an audio corpus (feed
     ``similarity.cosine_topk`` / ``embedding_near_dup``). Non-WAV blobs
-    are skipped (external codecs decode first at production scale)."""
+    and corrupt WAVs are skipped (external codecs decode first at
+    production scale)."""
 
     def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
-
-        from astro_sdk_spark.multimodal import codecs
 
         win = np.hanning(frame_size)
         n_bins = frame_size // 2 + 1
@@ -529,10 +514,10 @@ def extract_audio_features(
         for pdf in batches:
             ids, feats = [], []
             for pid, b in zip(pdf[id_col], pdf[content_col]):
-                blob = bytes(b or b"")
-                if blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
+                decoded = _decode_audio(bytes(b or b""), "skip")
+                if decoded is None:
                     continue
-                _, samples = codecs.decode_wav(blob)
+                _, samples = decoded
                 mono = samples.astype(np.float64).mean(axis=1)
                 if len(mono) < frame_size:
                     mono = np.pad(mono, (0, frame_size - len(mono)))
@@ -551,7 +536,11 @@ def extract_audio_features(
                     v = v / norm
                 ids.append(pid)
                 feats.append([float(x) for x in v])
-            yield pd.DataFrame({id_col: ids, "features": feats})
+            # object dtype: a batch whose blobs were all skipped must
+            # still convert to array<float>
+            yield pd.DataFrame(
+                {id_col: ids, "features": pd.Series(feats, dtype=object)}
+            )
 
     return df.select(id_col, content_col).mapInPandas(
         _feat, schema=f"{id_col} string, features array<float>"

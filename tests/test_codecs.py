@@ -1,4 +1,4 @@
-"""multimodal/codecs.py: real PNG/BMP/WAV codecs (stdlib+numpy).
+"""multimodal/codecs.py: real PNG/BMP/GIF/WAV codecs (stdlib+numpy).
 
 The PNG unfilter is verified against an independent, naive per-pixel
 implementation of the PNG spec's filter recovery (not by round-tripping
@@ -191,221 +191,16 @@ def test_sniff():
     assert sniff_image(b"\x00\x01\x02\x03") is None
 
 
-# ------------------------------------------------------------------- jpeg
-
-
-def _gradient(h, w):
-    import numpy as np
-
-    yy, xx = np.mgrid[0:h, 0:w]
-    return np.stack(
-        [
-            xx * 255 // max(w - 1, 1),
-            yy * 255 // max(h - 1, 1),
-            (xx + yy) * 255 // max(w + h - 2, 1),
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-
-
-def test_jpeg_round_trip_444_quality():
-    import numpy as np
-
-    from astro_sdk_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
-
-    img = _gradient(48, 64)
-    dec = decode_jpeg(encode_jpeg(img, quality=90))
-    assert dec.shape == (48, 64, 3)
-    assert np.abs(dec.astype(float) - img).mean() < 3.0
-
-
-def test_jpeg_round_trip_420_subsampled_and_odd_dims():
-    import numpy as np
-
-    from astro_sdk_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
-
-    img = _gradient(41, 53)  # not multiples of 8 or 16
-    dec = decode_jpeg(encode_jpeg(img, quality=90, subsample=True))
-    assert dec.shape == (41, 53, 3)
-    assert np.abs(dec.astype(float) - img).mean() < 5.0
-
-
-def test_jpeg_grayscale_and_flat_exactness():
-    import numpy as np
-
-    from astro_sdk_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
-
-    g = _gradient(32, 32)[..., 0]
-    dec = decode_jpeg(encode_jpeg(g, quality=90))
-    assert dec.shape == (32, 32, 1)
-    assert np.abs(dec[..., 0].astype(float) - g).mean() < 2.0
-    flat = np.full((16, 24, 3), 77, np.uint8)
-    assert np.abs(
-        decode_jpeg(encode_jpeg(flat, 95)).astype(int) - 77
-    ).max() == 0
-
-
-def test_jpeg_restart_markers():
-    import numpy as np
-
-    from astro_sdk_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
-
-    img = _gradient(48, 64)
-    for ri in (1, 3):
-        dec = decode_jpeg(encode_jpeg(img, 90, restart_interval=ri))
-        assert np.abs(dec.astype(float) - img).mean() < 3.0
-    dec = decode_jpeg(
-        encode_jpeg(img, 90, subsample=True, restart_interval=2)
-    )
-    assert np.abs(dec.astype(float) - img).mean() < 5.0
-
-
-def test_jpeg_noise_stress_high_quality():
-    """Dense AC coefficients + ZRL runs: noise at q=95 must survive with
-    small quantization error."""
-    import numpy as np
-
-    from astro_sdk_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.default_rng(3)
-    noise = rng.integers(0, 256, (40, 40, 3), dtype=np.uint8)
-    dec = decode_jpeg(encode_jpeg(noise, 95))
-    assert np.abs(dec.astype(float) - noise).mean() < 6.0
-
-
-def test_jpeg_progressive_matches_baseline_exactly():
-    """Progressive transport is a lossless reorganization of the same
-    quantized coefficients, so decode(SOF2 file) must equal decode(SOF0
-    file of the same image/quality) BYTE-FOR-BYTE — this pins spectral
-    selection, successive approximation (DC and AC first + refinement
-    scans), and EOB-run decoding all at once."""
-    import numpy as np
-
-    from astro_sdk_spark.multimodal.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.default_rng(11)
-    cases = [
-        ((16, 16, 1), False, 85),   # grayscale
-        ((24, 17, 3), False, 85),   # color, non-multiple-of-8 width
-        ((24, 17, 3), True, 85),    # 4:2:0 subsampling
-        ((40, 33, 3), True, 70),    # subsampled + odd dims + lower q
-        ((64, 48, 3), False, 50),   # denser AC coefficients
-    ]
-    for shape, sub, q in cases:
-        img = rng.integers(0, 256, shape).astype(np.uint8)
-        base = decode_jpeg(encode_jpeg(img, q, subsample=sub))
-        prog = decode_jpeg(encode_jpeg_progressive(img, q, subsample=sub))
-        assert np.array_equal(base, prog), (shape, sub, q)
-    # smooth gradients produce the LONG EOB runs real photos have
-    yy, xx = np.mgrid[0:48, 0:64]
-    grad = np.stack(
-        [(yy * 2) % 256, (xx * 3) % 256, (yy + xx) % 256], axis=-1
-    ).astype(np.uint8)
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg(grad, 85)),
-        decode_jpeg(encode_jpeg_progressive(grad, 85)),
-    )
-
-
-def test_jpeg_progressive_corrupt_blobs_fail_loudly():
-    import numpy as np
-    import pytest
-
-    from astro_sdk_spark.multimodal.jpeg import (
-        decode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.default_rng(5)
-    img = rng.integers(0, 256, (24, 24, 3)).astype(np.uint8)
-    blob = encode_jpeg_progressive(img, 85)
-    # truncation mid-scan must raise, not return garbage silently
-    with pytest.raises((ValueError, NotImplementedError)):
-        decode_jpeg(blob[: len(blob) // 2])
-    # scan-less progressive frame: header only, no SOS
-    import struct
-
-    sof2 = struct.pack(">BBHBHHB", 0xFF, 0xC2, 11, 8, 1, 1, 1) + bytes(
-        [1, 0x11, 0]
-    )
-    with pytest.raises(ValueError, match="no SOS"):
-        decode_jpeg(b"\xff\xd8" + sof2 + b"\xff\xd9")
-
-
-def test_jpeg_progressive_undefined_huffman_table_is_valueerror():
-    """A scan header naming a Huffman table that no DHT defined must
-    surface as ValueError (the uniform corrupt-data contract
-    multimodal.ops classifies on), not a raw KeyError from the table
-    dict lookup."""
-    import numpy as np
-    import pytest
-
-    from astro_sdk_spark.multimodal.jpeg import (
-        decode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, (24, 24, 3)).astype(np.uint8)
-    blob = bytearray(encode_jpeg_progressive(img, 85))
-    # locate every SOS; classify DC vs AC by its Ss byte
-    sos = [
-        i
-        for i in range(len(blob) - 1)
-        if blob[i] == 0xFF and blob[i + 1] == 0xDA
-    ]
-    assert sos, "encoder emitted no SOS"
-
-    def scan_info(i):
-        ns = blob[i + 4]
-        ss = blob[i + 5 + 2 * ns]
-        return ns, ss
-
-    dc = next(i for i in sos if scan_info(i)[1] == 0)
-    ac = next(i for i in sos if scan_info(i)[1] != 0)
-    for off, nibble, msg in (
-        (dc, 0x70, "undefined DC Huffman table"),
-        (ac, 0x07, "undefined AC Huffman table"),
-    ):
-        bad = bytearray(blob)
-        bad[off + 6] |= nibble  # first component's Td/Ta byte
-        with pytest.raises(ValueError, match=msg):
-            decode_jpeg(bytes(bad))
-
-
 def test_jpeg_lossless_still_gated():
-    """Both arithmetic DCT processes (SOF9/SOF10) decode now
-    (test_jpeg_arith.py); lossless (SOF3) and hierarchical stay
-    gated."""
-    import struct
-
-    import pytest
-
-    from astro_sdk_spark.multimodal.jpeg import decode_jpeg
+    """Lossless (SOF3) JPEG has no built-in decoder: the shared dispatch
+    raises NotImplementedError rather than a corrupt-data error."""
+    from astro_sdk_spark.multimodal.ops import _decode_image_array
 
     sof3 = struct.pack(">BBHBHHB", 0xFF, 0xC3, 11, 8, 1, 1, 1) + bytes(
         [1, 0x11, 0]
     )
-    with pytest.raises(NotImplementedError, match="SOF"):
-        decode_jpeg(b"\xff\xd8" + sof3 + b"\xff\xd9")
-
-
-def test_jpeg_sniff_and_batch_decode(spark, tmp_path):
-    """decode_image_batch reports REAL dimensions for baseline JPEGs."""
-    from astro_sdk_spark.multimodal.jpeg import encode_jpeg
-    from astro_sdk_spark.multimodal.ops import (
-        decode_image_batch,
-        media_table_from_files,
-    )
-
-    (tmp_path / "x.jpg").write_bytes(encode_jpeg(_gradient(24, 36), 85))
-    mt = media_table_from_files(spark, str(tmp_path) + "/*.jpg")
-    row = decode_image_batch(mt).collect()[0]
-    assert (row.width, row.height, row.channels) == (36, 24, 3)
+    with pytest.raises(NotImplementedError, match="JPEG"):
+        _decode_image_array(b"\xff\xd8" + sof3 + b"\xff\xd9")
 
 
 # -------------------------------------------------------------------- gif
@@ -582,267 +377,34 @@ def test_gif_batch_decode_and_resize(spark, tmp_path):
     assert decode_png(bytes(rrow.content)).shape == (4, 4, 3)
 
 
-def test_jpeg_fill_bytes_before_marker_tolerated():
-    """T.81 B.1.1.2 permits 0xFF fill bytes before any marker."""
-    import numpy as np
-
-    from astro_sdk_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
-
-    img = _gradient(16, 16)
-    blob = encode_jpeg(img, 90)
-    # inject fill bytes before the first DQT marker (FF DB)
-    i = blob.index(b"\xff\xdb")
-    padded = blob[:i] + b"\xff\xff\xff" + blob[i:]
-    dec = decode_jpeg(padded)
-    assert np.abs(dec.astype(float) - img).mean() < 3.0
-
-
-def test_jpeg_multi_scan_gated():
-    """Non-interleaved multi-scan baseline is legal JPEG but would decode
-    with wrong geometry — must gate, not return garbage."""
-    import struct
-
-    import pytest
-
-    from astro_sdk_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
-    import numpy as np
-
-    blob = bytearray(encode_jpeg(_gradient(16, 16), 90))
-    # rewrite the SOS header from 3 components to 1 (Ns=1) in place
-    i = bytes(blob).index(b"\xff\xda")
-    (seglen,) = struct.unpack(">H", blob[i + 2:i + 4])
-    # SOS payload: ns, (cs, tdta)*ns, ss, se, ah_al
-    new_payload = bytes([1, blob[i + 5], blob[i + 6], 0, 63, 0])
-    blob[i + 2:i + 2 + seglen] = struct.pack(">H", len(new_payload) + 2) + new_payload
-    with pytest.raises(NotImplementedError, match="multi-scan"):
-        decode_jpeg(bytes(blob))
-
-
-# ------------------------------------------------------------------- webp
-
-
-def _rt_webp(img, **kw):
-    import numpy as np
-
-    from astro_sdk_spark.multimodal.vp8l import (
-        decode_webp,
-        encode_webp_lossless,
-    )
-
-    out = decode_webp(encode_webp_lossless(img, **kw))
-    assert out.shape == img.shape
-    assert (out == img).all()
-
-
-def test_webp_lossless_roundtrip_literals_cache_lz77_transforms():
-    """VP8L round-trips byte-exact through every encoder-reachable
-    bitstream feature: plain literals, color cache, distance-1 LZ77
-    copies, the subtract-green transform, and their combination."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, (23, 31, 3)).astype(np.uint8)
-    for kw in (
-        {},
-        {"cache_bits": 6},
-        {"rle": True},
-        {"subtract_green": True},
-        {"cache_bits": 4, "rle": True, "subtract_green": True},
-    ):
-        _rt_webp(img, **kw)
-    # alpha channel survives and sets the header hint
-    img4 = rng.integers(0, 256, (9, 17, 4)).astype(np.uint8)
-    _rt_webp(img4, cache_bits=5, rle=True)
-
-
-def test_webp_lossless_lz77_and_cache_paths_actually_fire():
-    """The flag variants must EXERCISE their decode paths, not just
-    produce valid streams: a runs-heavy image compresses through the
-    backward-reference path, a few-colors image through the cache."""
-    import numpy as np
-
-    from astro_sdk_spark.multimodal.vp8l import (
-        _join,
-        _tokenize,
-        encode_webp_lossless,
-    )
-
-    img = np.zeros((16, 64, 3), np.uint8)
-    img[:, 20:40] = [5, 9, 250]
-    img[8:, :] = [1, 2, 3]
-    pix = [
-        _join(255, int(img[y, x, 0]), int(img[y, x, 1]), int(img[y, x, 2]))
-        for y in range(16)
-        for x in range(64)
-    ]
-    toks, _ = _tokenize(pix, 0, True)
-    assert any(t[0] == "copy" for t in toks)
-    assert len(encode_webp_lossless(img, rle=True)) < len(
-        encode_webp_lossless(img)
-    )
-    _rt_webp(img, rle=True)
-
-    rng = np.random.default_rng(3)
-    pal = rng.integers(0, 256, (8, 3)).astype(np.uint8)
-    imgc = pal[rng.integers(0, 8, (32, 32))]
-    pixc = [
-        _join(255, int(p[0]), int(p[1]), int(p[2]))
-        for row in imgc
-        for p in row
-    ]
-    toks, _ = _tokenize(pixc, 7, False)
-    assert sum(1 for t in toks if t[0] == "cache") > len(toks) // 2
-    _rt_webp(imgc, cache_bits=7)
-
-
-def test_webp_lossless_palette_roundtrip_packed_and_unpacked():
-    """Color-indexing transform: ≤16 colors packs several indices per
-    green byte (the width-reduction path); >16 colors stays unpacked."""
-    import numpy as np
-
-    rng = np.random.default_rng(5)
-    pal3 = np.array([[10, 20, 30], [200, 100, 0], [0, 0, 0]], np.uint8)
-    _rt_webp(pal3[rng.integers(0, 3, (13, 29))], use_palette=True)
-    pal2 = np.array([[255, 255, 255], [0, 0, 0]], np.uint8)  # 8 px/byte
-    _rt_webp(pal2[rng.integers(0, 2, (7, 19))], use_palette=True)
-    big = rng.integers(0, 256, (200, 3)).astype(np.uint8)
-    _rt_webp(big[rng.integers(0, 200, (11, 13))], use_palette=True)
-
-
-def test_webp_predictor_transform_all_modes_roundtrip():
-    """Spatial PREDICTOR transform: every one of the 14 modes decodes
-    back byte-exact as a fixed per-image mode, and a per-tile mode
-    cycle exercises the tile-lookup path of _inv_predictor."""
-    import numpy as np
-
-    rng = np.random.default_rng(17)
-    base = (np.arange(37)[None, :] * 3 + np.arange(23)[:, None] * 5) % 256
-    img = np.stack(
-        [base, (base * 2 + 17) % 256, (255 - base) % 256], axis=-1
-    ).astype(np.uint8)
-    img = ((img.astype(int) + rng.integers(0, 9, img.shape)) % 256).astype(
-        np.uint8
-    )
-    for mode in range(14):
-        _rt_webp(img, predictor_bits=2, predictor_mode=mode)
-    _rt_webp(img, predictor_bits=2)  # per-tile: cycles all 14 modes
-    _rt_webp(img, predictor_bits=4)  # coarser tiles, rows span tiles
-    # alpha flows through the per-channel prediction arithmetic too
-    img4 = np.dstack([img, ((base * 7 + 1) % 256).astype(np.uint8)])
-    _rt_webp(img4, predictor_bits=2)
-    # the transform must be load-bearing: the coded stream differs from
-    # the untransformed one, yet both decode to the same pixels
-    from astro_sdk_spark.multimodal.vp8l import encode_webp_lossless
-
-    assert encode_webp_lossless(img, predictor_bits=2) != (
-        encode_webp_lossless(img)
-    )
-
-
-def test_webp_cross_color_transform_roundtrip():
-    """CROSS-COLOR transform: fixed and per-tile (g2r, g2b, r2b)
-    deltas — including negative and extreme values — invert exactly,
-    alone and stacked with subtract-green + predictor."""
-    import numpy as np
-
-    rng = np.random.default_rng(19)
-    img = rng.integers(0, 256, (21, 33, 3)).astype(np.uint8)
-    _rt_webp(img, cross_color_bits=2)  # per-tile delta cycle
-    _rt_webp(img, cross_color_bits=3, cross_color=(-45, 33, -77))
-    _rt_webp(img, cross_color_bits=2, cross_color=(127, -128, 127))
-    # full stack: subtract-green → predictor → cross-color, then the
-    # decoder inverts all three in reverse order
-    _rt_webp(img, subtract_green=True, predictor_bits=2, cross_color_bits=2)
-
-
-def test_webp_meta_prefix_groups_roundtrip():
-    """META-PREFIX image: ≥2 prefix-code groups selected per tile. The
-    two checkerboard groups see disjoint palettes, so their code tables
-    genuinely differ; decode re-selects the group on every tile change
-    (including mid-row at coarse widths)."""
-    import numpy as np
-
-    from astro_sdk_spark.multimodal.vp8l import (
-        decode_webp,
-        encode_webp_lossless,
-    )
-
-    rng = np.random.default_rng(23)
-    # left/right halves from disjoint value ranges → per-group tables
-    img = np.empty((16, 24, 3), np.uint8)
-    img[:, :12] = rng.integers(0, 32, (16, 12, 3))
-    img[:, 12:] = rng.integers(224, 256, (16, 12, 3))
-    for kw in ({"meta_bits": 2}, {"meta_bits": 3},
-               {"meta_bits": 2, "predictor_bits": 2},
-               {"meta_bits": 2, "subtract_green": True}):
-        _rt_webp(img, **kw)
-    # literal-only restriction is enforced loudly
-    import pytest
-
-    with pytest.raises(ValueError):
-        encode_webp_lossless(img, meta_bits=2, rle=True)
-    with pytest.raises(ValueError):
-        encode_webp_lossless(img, meta_bits=2, cache_bits=4)
-    # 1×1 tile grid degenerates to a single group and still decodes
-    assert (decode_webp(encode_webp_lossless(img[:4, :4], meta_bits=9))
-            == img[:4, :4]).all()
-
-
-def test_webp_corrupt_fails_loudly():
-    """Lossy VP8 and animation now decode (multimodal.vp8,
-    decode_webp_frames; see test_vp8_lossy.py); corrupt containers,
-    bare/truncated ANMF chunks, and truncated lossy payloads raise
-    ValueError."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from astro_sdk_spark.multimodal.vp8l import (
-        decode_webp,
-        encode_webp_lossless,
-    )
-
-    # an ANMF chunk without the VP8X/ANIM preamble is malformed
-    anim = b"ANMF" + struct.pack("<I", 4) + b"\x00" * 4
-    riff = b"WEBP" + anim
-    blob = b"RIFF" + struct.pack("<I", len(riff)) + riff
-    with pytest.raises(ValueError):
-        decode_webp(blob)
-
-    # truncated lossy payload fails loudly, not silently
-    lossy = b"VP8 " + struct.pack("<I", 4) + b"\x00" * 4
-    riff = b"WEBP" + lossy
-    blob = b"RIFF" + struct.pack("<I", len(riff)) + riff
-    with pytest.raises(ValueError):
-        decode_webp(blob)
-
-    with pytest.raises(ValueError):
-        decode_webp(b"RIFF\x00\x00\x00\x00WEBPJUNK")
-    good = encode_webp_lossless(
-        np.arange(96, dtype=np.uint8).reshape(4, 8, 3)
-    )
-    with pytest.raises((ValueError, IndexError)):
-        decode_webp(good[: len(good) // 2])
-
-
-def test_webp_sniff_and_batch_decode(spark, tmp_path):
-    """The .webp extension flows through media_table_from_files /
-    decode_image_batch like the other built-in codecs."""
-    import numpy as np
+def test_extract_features_gif_pixels_and_corrupt_fallback(spark, tmp_path):
+    """extract_image_features decodes through the shared dispatch: a GIF
+    gets real pixel features, and a truncated PNG (zlib fails on the cut
+    IDAT stream) gets the documented sha256 pseudo-features instead of
+    failing the job."""
+    import hashlib
 
     from astro_sdk_spark.multimodal.ops import (
-        decode_image_batch,
+        extract_image_features,
         media_table_from_files,
     )
-    from astro_sdk_spark.multimodal.vp8l import encode_webp_lossless
 
-    rng = np.random.default_rng(9)
-    img = rng.integers(0, 256, (24, 36, 3)).astype(np.uint8)
-    (tmp_path / "x.webp").write_bytes(encode_webp_lossless(img, rle=True))
-    mt = media_table_from_files(spark, str(tmp_path) + "/*.webp")
-    row = decode_image_batch(mt).collect()[0]
-    assert (row.width, row.height, row.channels) == (36, 24, 3)
+    (tmp_path / "red.gif").write_bytes(
+        _gif_bytes(np.zeros((4, 4), int), [(255, 0, 0), (0, 0, 0)])
+    )
+    rng = np.random.default_rng(0)
+    png = encode_png(rng.integers(0, 256, (16, 16, 3)).astype(np.uint8))
+    bad = png[:-20]
+    (tmp_path / "cut.png").write_bytes(bad)
+    mt = media_table_from_files(spark, str(tmp_path) + "/*")
+    got = {
+        r.path.rsplit("/", 1)[-1]: r.features
+        for r in extract_image_features(mt, dim=8).collect()
+    }
+    # [Rmean, Rstd, Gmean, Gstd, Bmean, Bstd, hist×2]; gray=85 → low bin
+    assert got["red.gif"] == pytest.approx([1, 0, 0, 0, 0, 0, 1, 0], abs=1e-6)
+    sha = hashlib.sha256(bad).digest()
+    assert got["cut.png"] == pytest.approx([sha[i] / 255.0 for i in range(8)])
 
 
 def _gif_anim_bytes(sw, sh, palette, frames):
@@ -932,7 +494,7 @@ def test_gif_animation_frames_composite():
 
 def test_gif_animation_frame_sampling(spark, tmp_path):
     """Animated .gif flows through frame_sample_video as composited
-    PNG frames, same contract as animated WebP and AVI."""
+    PNG frames; frame_idx is the frame number."""
     import numpy as np
 
     from astro_sdk_spark.multimodal.codecs import (
