@@ -236,83 +236,12 @@ def sniff_image(blob: bytes) -> str | None:
 
 
 def decode_gif(blob: bytes) -> np.ndarray:
-    """GIF87a/89a → (H, W, 3|4) uint8 (first frame; 4 channels when the
-    frame declares a transparent index). Full LZW decode with variable
-    code widths and dictionary resets, local/global palettes, and the
-    4-pass interlace order — stdlib only."""
-    if blob[:4] != b"GIF8" or blob[4:6] not in (b"7a", b"9a"):
-        raise ValueError("not a GIF (bad signature)")
-    sw, sh = struct.unpack("<HH", blob[6:10])
-    packed, _bg, _aspect = blob[10], blob[11], blob[12]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = np.frombuffer(blob[pos:pos + 3 * n], dtype=np.uint8).reshape(n, 3)
-        pos += 3 * n
-    transparent = None
-    while pos < len(blob):
-        b = blob[pos]
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension
-            label = blob[pos + 1]
-            pos += 2
-            if label == 0xF9 and blob[pos] >= 4:  # graphic control
-                flags = blob[pos + 1]
-                if flags & 0x01:
-                    transparent = blob[pos + 4]
-            while blob[pos]:  # skip sub-blocks
-                pos += 1 + blob[pos]
-            pos += 1
-            continue
-        if b != 0x2C:
-            raise ValueError(f"gif: unexpected block 0x{b:02X}")
-        # image descriptor
-        ix, iy, iw, ih = struct.unpack("<HHHH", blob[pos + 1:pos + 9])
-        ipacked = blob[pos + 9]
-        pos += 10
-        pal = gct
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x07)
-            pal = np.frombuffer(blob[pos:pos + 3 * n], dtype=np.uint8).reshape(n, 3)
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("gif: no palette")
-        interlaced = bool(ipacked & 0x40)
-        min_code = blob[pos]
-        pos += 1
-        data = bytearray()
-        while blob[pos]:
-            ln = blob[pos]
-            data += blob[pos + 1:pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        indices = _lzw_decode(bytes(data), min_code, iw * ih)
-        idx = np.asarray(indices[: iw * ih], dtype=np.int32).reshape(ih, iw)
-        if interlaced:
-            out = np.empty_like(idx)
-            rows = (
-                list(range(0, ih, 8)) + list(range(4, ih, 8))
-                + list(range(2, ih, 4)) + list(range(1, ih, 2))
-            )
-            for src, dst in enumerate(rows):
-                out[dst] = idx[src]
-            idx = out
-        rgb = pal[np.clip(idx, 0, len(pal) - 1)]
-        if transparent is not None:
-            alpha = np.where(idx == transparent, 0, 255).astype(np.uint8)
-            frame = np.dstack([rgb, alpha])
-        else:
-            frame = rgb
-        # first frame only (training-metadata scope); canvas placement for
-        # frames smaller than the logical screen pads with palette entry 0
-        if (ix, iy, iw, ih) != (0, 0, sw, sh):
-            ch = frame.shape[2]
-            canvas = np.zeros((sh, sw, ch), dtype=np.uint8)
-            canvas[iy:iy + ih, ix:ix + iw] = frame
-            frame = canvas
-        return np.ascontiguousarray(frame)
+    """GIF87a/89a → (H, W, 3|4) uint8: the first frame of
+    :func:`decode_gif_frames` on the logical screen, padded with zeros
+    where the frame is smaller. 4 channels only when that frame declares
+    a transparent index (its pixels get alpha 0); otherwise RGB."""
+    for frame, _delay_ms, has_alpha in _iter_gif_frames(bytes(blob)):
+        return frame if has_alpha else np.ascontiguousarray(frame[..., :3])
     raise ValueError("gif: no image data")
 
 
@@ -323,7 +252,21 @@ def decode_gif_frames(blob: bytes):
     transparency, local palettes, interlace. Restore-to-background
     clears to fully transparent (the modern-decoder convention rather
     than the literal background index)."""
-    blob = bytes(blob)
+    frames: list[np.ndarray] = []
+    delays: list[int] = []
+    for frame, delay_ms, _has_alpha in _iter_gif_frames(bytes(blob)):
+        frames.append(frame)
+        delays.append(delay_ms)
+    if not frames:
+        raise ValueError("gif: no image data")
+    return frames, delays
+
+
+def _iter_gif_frames(blob: bytes):
+    """Yield ``(canvas, delay_ms, has_transparent_index)`` per image of
+    the block stream, lazily, so a still decode stops after frame 0. Full
+    LZW decode with variable code widths and dictionary resets,
+    local/global palettes and the 4-pass interlace order — stdlib only."""
     if blob[:4] != b"GIF8" or blob[4:6] not in (b"7a", b"9a"):
         raise ValueError("not a GIF (bad signature)")
     sw, sh = struct.unpack("<HH", blob[6:10])
@@ -335,8 +278,6 @@ def decode_gif_frames(blob: bytes):
         gct = np.frombuffer(blob[pos:pos + 3 * n], dtype=np.uint8).reshape(n, 3)
         pos += 3 * n
     canvas = np.zeros((sh, sw, 4), dtype=np.uint8)
-    frames: list[np.ndarray] = []
-    delays: list[int] = []
     transparent = None
     delay_cs = 0
     disposal = 0
@@ -401,8 +342,7 @@ def decode_gif_frames(blob: bytes):
         else:
             region[..., :3] = rgb
             region[..., 3] = 255
-        frames.append(canvas.copy())
-        delays.append(delay_cs * 10)
+        yield canvas.copy(), delay_cs * 10, transparent is not None
         if disposal == 2:  # restore to background
             canvas[iy:iy + ih, ix:ix + iw] = 0
         elif disposal == 3 and prev is not None:  # restore to previous
@@ -410,9 +350,6 @@ def decode_gif_frames(blob: bytes):
         transparent = None
         delay_cs = 0
         disposal = 0
-    if not frames:
-        raise ValueError("gif: no image data")
-    return frames, delays
 
 
 def _lzw_decode(data: bytes, min_code: int, max_pixels: int) -> list[int]:

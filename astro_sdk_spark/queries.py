@@ -1423,13 +1423,17 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (Spark ``percentile`` == DuckDB
     ``quantile_cont``, both linear interpolation). The approximate
     ``approx_percentile``/HLL family deliberately has no oracle entry —
-    approximation results are engine-specific by design."""
+    approximation results are engine-specific by design. The four
+    quantiles come from one ``percentile(x, array(...))`` buffer per
+    group rather than four copies of the group's values."""
     o = T(spark, sf_dir, "orders")
-    return o.groupBy("o_orderstatus").agg(
+    ps = F.expr("percentile(o_totalprice, array(0.25, 0.5, 0.9, 0.99))")
+    return o.groupBy("o_orderstatus").agg(ps.alias("ps")).select(
+        "o_orderstatus",
         *[
-            F.round(F.expr(f"percentile(o_totalprice, {p})"), 2).alias(name)
-            for p, name in [(0.25, "p25"), (0.5, "p50"), (0.9, "p90"), (0.99, "p99")]
-        ]
+            F.round(F.col("ps")[i], 2).alias(name)
+            for i, name in enumerate(["p25", "p50", "p90", "p99"])
+        ],
     )
 
 

@@ -492,6 +492,28 @@ def test_gif_animation_frames_composite():
     assert frames[3][4, 5].tolist() == list(frames[2][4, 5])
 
 
+def test_gif_still_is_padded_frame_zero():
+    """decode_gif is frame 0 of decode_gif_frames: RGB when no
+    transparent index is declared, RGBA when one is, and zero padding
+    outside a frame smaller than the logical screen."""
+    import numpy as np
+
+    from astro_sdk_spark.multimodal.codecs import decode_gif, decode_gif_frames
+
+    pal = [(250, 10, 10), (10, 250, 10), (10, 10, 250), (0, 0, 0)]
+    patch = np.array([[0, 1, 2], [2, 1, 0]])
+    for transparent, channels in [(None, 3), (1, 4)]:
+        blob = _gif_anim_bytes(6, 5, pal, [
+            (2, 1, patch, transparent, 10, 0),
+            (0, 0, np.full((5, 6), 2, int), None, 10, 0),
+        ])
+        arr = decode_gif(blob)
+        assert arr.shape == (5, 6, channels)
+        assert np.array_equal(arr, decode_gif_frames(blob)[0][0][..., :channels])
+        assert not arr[0].any() and not arr[:, :2].any() and not arr[:, 5].any()
+        assert tuple(arr[1, 2, :3]) == pal[0]
+
+
 def test_gif_animation_frame_sampling(spark, tmp_path):
     """Animated .gif flows through frame_sample_video as composited
     PNG frames; frame_idx is the frame number."""
