@@ -15,7 +15,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 # Python workers must be able to import astro_sdk_spark to deserialize
-# the Arrow-UDF queries (PQ/IVF-PQ/avro): export the repo root to their
+# the Arrow-UDF queries (PQ/IVF-PQ): export the repo root to their
 # PYTHONPATH at import time — BEFORE the harness builds its
 # SparkSession — so the contract holds regardless of the harness's cwd
 # (same export get_session performs for library callers).

@@ -18,6 +18,7 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any, Callable, Sequence
 
@@ -156,6 +157,27 @@ def refuse_orphaned_location(spark: SparkSession, qualified_name: str) -> None:
             f"location {path} holds files left by an earlier run; remove "
             f"them with SparkEngine.vacuum_orphans() or write in replace mode"
         )
+
+
+# ------------------------------------------------------------------- avro
+@contextmanager
+def avro_source(spark: SparkSession):
+    """Scope of one read or write through Spark's own avro data source.
+    Spark ships that source as the separate spark-avro module; when the
+    session does not load it, Spark's "Failed to find data source: avro"
+    becomes one error that names the package to deploy."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        yield
+    except AnalysisException as exc:
+        if exc.getCondition() != "_LEGACY_ERROR_TEMP_1139":
+            raise
+        raise RuntimeError(
+            "Avro goes through Spark's avro data source, which this session "
+            "does not load: start it with spark.jars.packages="
+            f"org.apache.spark:spark-avro_2.13:{spark.version}"
+        ) from exc
 
 
 @dataclass
@@ -379,8 +401,9 @@ class SparkEngine:
     # ---------------------------------------------------------------- read
     def read_file(self, file: File, extra_options: dict | None = None) -> DataFrame:
         """File → DataFrame. SURVEY §2.4 format matrix; executor-parallel for
-        csv/json/ndjson/parquet, driver-side pandas for xlsx (documented
-        small-file path, reference ``files/types/excel.py``).
+        csv/json/ndjson/parquet/orc, Spark's avro source for avro, and
+        driver-side pandas for xlsx/xls (documented small-file path,
+        reference ``files/types/excel.py``).
         ``extra_options`` (e.g. from typed LoadOptions) override the File's
         own options."""
         ftype = file.type
@@ -395,22 +418,8 @@ class SparkEngine:
             # counterpart — the warehouse owned storage formats there.
             return self.spark.read.options(**opts).orc(path)
         if ftype == FileType.AVRO:
-            # split-parallel stdlib container reader (avro.py): the driver
-            # reads only headers, executors decode sync-delimited block
-            # ranges via mapInPandas — one big file still fans out. On a
-            # cluster with the spark-avro JVM package installed, prefer it.
-            from pyspark.errors import AnalysisException
-
-            try:
+            with avro_source(self.spark):
                 return self.spark.read.options(**opts).format("avro").load(path)
-            except AnalysisException as exc:
-                msg = str(exc)
-                if "DATA_SOURCE_NOT_FOUND" not in msg and "Failed to find data source" not in msg:
-                    raise
-                from astro_sdk_spark.avro import read_avro_distributed
-
-                local = path.removeprefix("file://")
-                return read_avro_distributed(self.spark, local)
         if ftype == FileType.CSV:
             # defaults merge UNDER user options — typed LoadOptions set these
             # same keys, so keyword-arg passing would raise "multiple values"
@@ -431,26 +440,18 @@ class SparkEngine:
                 schema = self.spark.read.options(**opts).json(sample).schema
                 return self.spark.read.options(**opts).schema(schema).json(path)
             return self.spark.read.options(**opts).json(path)
-        if ftype == FileType.XLSX:
+        if ftype in (FileType.XLSX, FileType.XLS):
             # driver-side small-file path (reference files/types/excel.py):
-            # stdlib zip+XML reader — no openpyxl in this environment
-            import pandas as pd
-
-            from astro_sdk_spark.xlsx import read_xlsx
-
-            columns, rows = read_xlsx(path)
-            pdf = pd.DataFrame(rows, columns=columns)
-            return self.spark.createDataFrame(pdf)
-        if ftype == FileType.XLS:
-            # driver-side small-file path, same contract as xlsx: stdlib
-            # OLE2+BIFF8 reader (xlrd absent in this environment)
+            # stdlib readers, zip+XML for xlsx and OLE2+BIFF8 for xls — no
+            # openpyxl or xlrd in this environment
             import pandas as pd
 
             from astro_sdk_spark.xls import read_xls
+            from astro_sdk_spark.xlsx import read_xlsx
 
-            columns, rows = read_xls(path)
-            pdf = pd.DataFrame(rows, columns=columns)
-            return self.spark.createDataFrame(pdf)
+            read = read_xlsx if ftype == FileType.XLSX else read_xls
+            columns, rows = read(path)
+            return self.spark.createDataFrame(pd.DataFrame(rows, columns=columns))
         raise ValueError(f"Unsupported file type: {ftype}")
 
     # --------------------------------------------------------------- write

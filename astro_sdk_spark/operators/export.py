@@ -21,10 +21,14 @@ import tempfile
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from astro_sdk_spark.engine import SparkEngine
+from astro_sdk_spark.engine import SparkEngine, avro_source
 from astro_sdk_spark.files import File, FileType
 from astro_sdk_spark.session import default_session
 from astro_sdk_spark.table import BaseTable
+
+# XLSX caps a sheet at 1,048,576 rows and the writer spends one on the
+# header row
+XLSX_EXPORT_MAX_ROWS = 1_048_575
 
 
 def _resolve_df(input_data, eng: SparkEngine) -> DataFrame:
@@ -44,7 +48,7 @@ def export_to_file(
     engine: SparkEngine | None = None,
     spark: SparkSession | None = None,
 ) -> File:
-    """Write a single file at output_file.path (csv/json/ndjson/parquet/orc/xlsx)."""
+    """Write a single file at output_file.path (csv/json/ndjson/parquet/orc/avro/xlsx)."""
     if if_exists not in ("replace", "exception"):
         raise ValueError(f"if_exists must be 'replace' or 'exception', got {if_exists!r}")
     eng = engine or SparkEngine(spark or default_session())
@@ -63,54 +67,23 @@ def export_to_file(
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
 
     ftype = output_file.type
-    if ftype in (FileType.XLSX, FileType.XLS):
+    if ftype == FileType.XLSX:
         # driver-side small-file path (reference files/types/excel.py);
-        # stdlib writers — no openpyxl/xlsxwriter/xlwt in this environment.
+        # stdlib writer — no openpyxl/xlsxwriter in this environment.
         # Spreadsheets are a driver-memory product by nature, so the
         # collect() is gated: counting past the cap aborts BEFORE any rows
         # move to the driver, so a 100 TB table pointed at .xlsx fails in
-        # one cheap aggregate instead of OOMing the driver. (XLS/BIFF8
-        # itself caps a sheet at 65,536 rows; XLSX at 1,048,576 — and the
-        # writers emit a header row, so the DATA cap is one less.)
-        cap = int(
-            os.environ.get(
-                "ASTRO_EXCEL_EXPORT_MAX_ROWS",
-                str(65_535 if ftype == FileType.XLS else 1_048_575),
-            )
-        )
-        n_rows = df.limit(cap + 1).count()
-        if n_rows > cap:
+        # one cheap aggregate instead of OOMing the driver.
+        cap = XLSX_EXPORT_MAX_ROWS
+        if df.limit(cap + 1).count() > cap:
             raise ValueError(
-                f"refusing to export >{cap:,} rows to {ftype.name}: the "
-                f"spreadsheet path collects to the driver (and the format "
-                f"itself caps sheet size). Export to parquet/csv instead, "
-                f"or raise ASTRO_EXCEL_EXPORT_MAX_ROWS explicitly."
+                f"refusing to export >{cap:,} rows to XLSX: the spreadsheet "
+                f"path collects to the driver and the format caps a sheet "
+                f"at {cap + 1:,} rows. Export to parquet/csv instead."
             )
-        collected = df.collect()
-        if ftype == FileType.XLS:
-            from astro_sdk_spark.xls import write_xls
+        from astro_sdk_spark.xlsx import write_xlsx
 
-            write_xls(path, df.columns, collected)
-        else:
-            from astro_sdk_spark.xlsx import write_xlsx
-
-            write_xlsx(path, df.columns, [tuple(r) for r in collected])
-        return output_file
-
-    if ftype == FileType.AVRO:
-        # single-file container write via the stdlib codec (avro.py) —
-        # streams partitions through the driver (toLocalIterator keeps at
-        # most one partition in memory), same single-file contract as the
-        # other export branches
-        from astro_sdk_spark.avro import spark_to_avro_schema, write_avro
-
-        schema = spark_to_avro_schema(df.schema, name="export")
-        write_avro(
-            path,
-            (r.asDict(recursive=True) for r in df.toLocalIterator()),
-            schema,
-            codec="deflate",
-        )
+        write_xlsx(path, df.columns, [tuple(r) for r in df.collect()])
         return output_file
 
     tmpdir = tempfile.mkdtemp(prefix="astro_export_")
@@ -143,6 +116,10 @@ def export_to_file(
     elif ftype == FileType.ORC:
         writer.orc(out_dir)
         pattern = "part-*.orc"
+    elif ftype == FileType.AVRO:
+        with avro_source(eng.spark):
+            writer.format("avro").save(out_dir)
+        pattern = "part-*.avro"
     elif ftype in (FileType.NDJSON, FileType.JSON):
         writer.json(out_dir)
         pattern = f"part-*.json{comp_suffix}"

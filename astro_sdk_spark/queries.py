@@ -2181,57 +2181,6 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# Avro container round-trip — the §2.4 format-matrix extension (avro.py).
-# documents.parquet → single-file .avro (stdlib writer, deflate) →
-# split-parallel distributed read → aggregate; the oracle aggregates the
-# same rows straight from parquet, so a green hash proves the whole codec
-# (zigzag varints, block framing, deflate, sync-scan splits) end-to-end.
-
-_AVRO_ORACLE = """
-    SELECT lang,
-           count(*) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars,
-           CAST(sum(length(text)) AS BIGINT) AS total_text_len
-    FROM documents GROUP BY lang
-"""
-
-
-@q("q_load_avro", _AVRO_ORACLE)
-def q_load_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Avro ingest path (engine.py read_file AVRO branch → avro.py
-    read_avro_distributed): stage the documents table as one Avro
-    container file, read it back split-parallel, aggregate per lang.
-    Staged fresh on every call — the writer is deterministic and the
-    corpus is small relative to the queries that scan it repeatedly."""
-    import tempfile
-
-    from astro_sdk_spark.avro import (
-        read_avro_distributed,
-        spark_to_avro_schema,
-        write_avro,
-    )
-
-    docs = T(spark, sf_dir, "documents")
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    stage = os.path.join(tempfile.gettempdir(), f"astro_avro_stage_{sf_tag}.avro")
-    tmp = stage + ".tmp"
-    schema = spark_to_avro_schema(docs.schema, name="documents")
-    write_avro(
-        tmp,
-        (r.asDict() for r in docs.toLocalIterator()),
-        schema,
-        codec="deflate",
-    )
-    os.replace(tmp, stage)
-    back = read_avro_distributed(spark, stage)
-    return back.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("total_chars"),
-        F.sum(F.length("text")).cast("bigint").alias("total_text_len"),
-    )
-
-
 _IVF_ORACLE = """
     WITH cent AS (
       SELECT vec_id AS cent_id, CAST(embedding AS DOUBLE[]) AS cvec
@@ -6940,8 +6889,7 @@ _TAIL_VARIANTS = [
     "q_ivf_trained",       # ANN: q_embedding_topk, q_ivfpq_topk
                            # in-window (driver-verified r5-r8)
     "q_ann_lsh",           # similarity: q_embedding_topk, q_ivfpq_topk
-    "q_ann_recall",        # similarity: q_embedding_topk (tailed to make
-                           # window room for q_load_avro)
+    "q_ann_recall",        # similarity: q_embedding_topk
     "q_pq_topk",           # PQ: q_ivfpq_topk runs the same encode+ADC
                            # machinery inside its in-window oracle
     "q_ivfpq_trained",     # PQ: q_ivfpq_topk (in-window) + q_ivf_trained

@@ -75,21 +75,48 @@ def _python_daemon_conf(master: str) -> dict[str, str]:
     return {}
 
 
+def _heap_gb(total_kb: int, avail_kb: int) -> int:
+    """Local-mode heap in GiB for a box with ``total_kb`` of RAM and
+    ``avail_kb`` of it available: half of what is available now, at most
+    35% of the machine, clamped to [2, 16].
+
+    Sized from ``MemAvailable`` (what the box can actually give us NOW),
+    not ``MemTotal`` — two concurrent local sessions, or other tenants on
+    a shared box, each claim a share of what remains rather than each
+    claiming 35% of the machine and jointly exhausting it. The 2g floor
+    is the heap perfbench and side probes already run at; a floor above
+    the budget (it was 8g) pinned a second session on a 16 GiB box past
+    what the box had, and the OOM killer took the first one's JVM.
+
+    Cap at 16g (was 64g). Measured on the 32-thread/128 GiB box — a
+    Firecracker guest with free page reporting ("Free page reporting
+    enabled" in dmesg): every page the guest frees is returned to the
+    HOST, and re-touching it pays a host-side fault + zeroing. A 44g heap
+    exposes ~11M 4 KiB pages of first-touch per session, which surfaced
+    as random 10–130 s stime storms in allocation-heavy jobs (see -Xms
+    note in get_session). At 16g the same workloads ran storm-free
+    (ingest reps 4.3/2.5/3.0 s vs 31/2.7/7.9 s at 44g) and the heaviest
+    memory consumer — the 30×-volume jaccard probe that GC-thrashed at a
+    fixed 8g — stays clean: x30 min-of-3 47.0 s at 16g vs 44.0 s at 44g
+    (-7%, inside leg noise), with pagerank x30 reps TIGHTER
+    (42.7/40.5/42.0). More heap only helps when a stage exceeds execution
+    memory; past that it is pure first-touch/reclaim exposure on
+    virtualized hosts. -XX:+UseTransparentHugePages was also tried and
+    REJECTED: ingest first-rep 131 s (direct-compaction stalls under the
+    same page-reporting regime)."""
+    budget_kb = min(int(avail_kb * 0.5), int(total_kb * 0.35))
+    return max(2, min(16, budget_kb // (1024 * 1024)))
+
+
 def _default_driver_mem() -> str:
     """Heap for the local[*] JVM (driver == all executors in local
-    mode), sized to the MACHINE instead of Spark's 1g-era default:
-    ~35% of physical RAM, clamped to [8g, 16g]. An N-thread local
-    session divides execution memory across N concurrent tasks — a
-    fixed 8g on a 32-thread/128 GiB box gives each task ~90 MB before
-    sort spill, which is exactly where a wide similarity join's
-    array-carrying verify stage lands (measured: the same 30×-volume
-    jaccard_join leg GC/spill-thrashed at 8g and ran clean at
-    machine-proportional heap). Sized from ``MemAvailable`` (what the
-    box can actually give us NOW), not ``MemTotal`` — two concurrent
-    local sessions, or other tenants on a shared box, each claim a
-    share of what remains rather than each claiming 35% of the machine
-    and jointly exhausting it — capped at 35% of MemTotal so one
-    session on an idle box behaves as before. Honors
+    mode), sized to the MACHINE instead of Spark's 1g-era default (see
+    :func:`_heap_gb`). An N-thread local session divides execution
+    memory across N concurrent tasks — a fixed 8g on a 32-thread/128 GiB
+    box gives each task ~90 MB before sort spill, which is exactly where
+    a wide similarity join's array-carrying verify stage lands
+    (measured: the same 30×-volume jaccard_join leg GC/spill-thrashed at
+    8g and ran clean at machine-proportional heap). Honors
     $SPARK_GRAFT_DRIVER_MEM (documented in README); on a real cluster
     this conf is inert for executors, which size via
     spark.executor.memory."""
@@ -110,27 +137,7 @@ def _default_driver_mem() -> str:
             return "8g"
         if avail_kb is None:  # pre-3.14 kernels: conservative fallback
             avail_kb = total_kb // 2
-        budget_kb = min(int(avail_kb * 0.5), int(total_kb * 0.35))
-        # Cap at 16g (was 64g). Measured on the 32-thread/128 GiB box —
-        # a Firecracker guest with free page reporting ("Free page
-        # reporting enabled" in dmesg): every page the guest frees is
-        # returned to the HOST, and re-touching it pays a host-side
-        # fault + zeroing. A 44g heap exposes ~11M 4 KiB pages of
-        # first-touch per session, which surfaced as random 10–130 s
-        # stime storms in allocation-heavy jobs (see -Xms note in
-        # get_session). At 16g the same workloads ran storm-free
-        # (ingest reps 4.3/2.5/3.0 s vs 31/2.7/7.9 s at 44g) and the
-        # heaviest memory consumer — the 30×-volume jaccard probe that
-        # GC-thrashed at the old fixed 8g — stays clean: x30 min-of-3
-        # 47.0 s at 16g vs 44.0 s at 44g (-7%, inside leg noise), with
-        # pagerank x30 reps TIGHTER (42.7/40.5/42.0). More heap only
-        # helps when a stage exceeds execution memory; past that it is
-        # pure first-touch/reclaim exposure on virtualized hosts.
-        # -XX:+UseTransparentHugePages was also tried and REJECTED:
-        # ingest first-rep 131 s (direct-compaction stalls under the
-        # same page-reporting regime).
-        gb = max(8, min(16, budget_kb // (1024 * 1024)))
-        return f"{gb}g"
+        return f"{_heap_gb(total_kb, avail_kb)}g"
     except Exception:  # noqa: BLE001 - non-Linux / unreadable meminfo
         return "8g"
 

@@ -1,10 +1,11 @@
-"""Stdlib-only legacy binary ``.xls`` (BIFF8) reader AND writer.
+"""Stdlib-only legacy binary ``.xls`` (BIFF8) reader.
 
 Reference parity: ``python-sdk/src/astro/files/types/excel.py:13-46`` reads
-``.xls`` via ``pd.read_excel`` (xlrd under the hood) and historically wrote
-it via xlwt (since retired from pandas). Neither xlrd nor any Excel library
-is available in this environment, so this module implements the subset of
-the public formats needed to load and write a worksheet:
+``.xls`` via ``pd.read_excel`` (xlrd under the hood). Pandas lost ``.xls``
+writing when xlwt was retired, so ``.xls`` is read-only here: export to
+``.xlsx`` instead. Neither xlrd nor any Excel library is available in this
+environment, so this module implements the subset of the public formats
+needed to load a worksheet:
 
 - the OLE2 / Compound File Binary container ([MS-CFB]): header, DIFAT,
   FAT chains, directory entries, and the mini-stream/miniFAT for streams
@@ -19,11 +20,6 @@ Scope matches the xlsx module: driver-side small-file path (xls caps at
 returned as their raw serial numbers — distinguishing dates from plain
 numbers requires the XF/FORMAT record chain, which ``pd.read_excel``
 resolves via xlrd; callers needing datetimes should convert explicitly.
-
-The write path (:func:`write_xls`) emits LABELSST/NUMBER/BOOLERR cells,
-chooses the mini-stream or regular-FAT container automatically by size,
-and CONTINUE-splits the SST at the 8224-byte record cap — see the writer
-section below.
 """
 
 from __future__ import annotations
@@ -385,279 +381,3 @@ def read_xls(path: str) -> tuple[list[str], list[list]]:
         for r in range(1, max_row + 1)
     ]
     return header, rows
-
-
-# ------------------------------------------------------------------ writer
-#
-# Write path: pandas dropped .xls writing when xlwt retired, so the
-# reference stack cannot produce these files any more — but plenty of
-# legacy consumers still ingest them. Both public formats are implemented
-# from their specs ([MS-XLS] BIFF8 records, [MS-CFB] compound container),
-# mirroring the reader above: LABELSST+SST for strings (CONTINUE-split at
-# 8224-byte record boundaries, mid-string splits carry a fresh
-# compression-flag byte), NUMBER for numerics, BOOLERR for booleans; the
-# BIFF stream lands in the mini stream when under the 4096-byte cutoff
-# and in regular FAT sectors otherwise.
-
-_MAX_RECORD = 8224          # BIFF8 record payload cap
-_SECTOR = 512
-_MINI_SECTOR = 64
-_MINI_CUTOFF = 4096
-_FATSECT = 0xFFFFFFFD
-_NOSTREAM = 0xFFFFFFFF
-
-
-def _rec(rid: int, payload: bytes) -> bytes:
-    return struct.pack("<HH", rid, len(payload)) + payload
-
-
-def _sst_records(strings: list[str], total_refs: int) -> bytes:
-    """SST + CONTINUE records. Strings are always written uncompressed
-    (UTF-16-LE, grbit 0x01); records split at string boundaries when
-    possible, mid-characters (with a fresh flag byte) when one string
-    alone exceeds the record cap."""
-    out = bytearray()
-    cur = bytearray(struct.pack("<II", total_refs, len(strings)))
-    rid = _SST
-
-    def flush() -> None:
-        nonlocal cur, rid
-        out.extend(_rec(rid, bytes(cur)))
-        rid = _CONTINUE
-        cur = bytearray()
-
-    for s in strings:
-        data = s.encode("utf-16-le")
-        n_units = len(data) // 2  # cch counts UTF-16 CODE UNITS, not chars
-        if n_units > 0xFFFF:
-            raise ValueError(
-                f"xls cell text exceeds 65535 UTF-16 units ({n_units})"
-            )
-        header = struct.pack("<HB", n_units, 0x01)
-        if len(cur) + len(header) > _MAX_RECORD:
-            flush()
-        cur += header
-        pos = 0
-        while pos < len(data):
-            room = _MAX_RECORD - len(cur)
-            if room < 2:
-                flush()
-                cur += b"\x01"  # continuation flag byte: still utf-16
-                room = _MAX_RECORD - len(cur)
-            take = min(len(data) - pos, room - room % 2)
-            cur += data[pos:pos + take]
-            pos += take
-    flush()
-    return bytes(out)
-
-
-def _biff_stream(header: list[str], rows: list[list]) -> bytes:
-    """Assemble the full Workbook BIFF8 stream (globals + one sheet)."""
-    n_rows = len(rows) + 1
-    n_cols = len(header)
-    if n_rows > 65536:
-        raise ValueError(f".xls caps at 65536 rows, got {n_rows}")
-    if n_cols > 256:
-        raise ValueError(f".xls caps at 256 columns, got {n_cols}")
-
-    # Pass 1: classify cells, building the shared-string table.
-    sst_index: dict[str, int] = {}
-    sst_list: list[str] = []
-    total_refs = 0
-
-    def intern(s: str) -> int:
-        nonlocal total_refs
-        total_refs += 1
-        if s not in sst_index:
-            sst_index[s] = len(sst_list)
-            sst_list.append(s)
-        return sst_index[s]
-
-    ixfe = 15  # default cell XF (after the 15 style XFs)
-    cell_recs = bytearray()
-    all_rows = [list(header)] + [list(r) for r in rows]
-    for r, row in enumerate(all_rows):
-        for c, v in enumerate(row[:n_cols]):
-            if v is None:
-                continue
-            if isinstance(v, bool):
-                cell_recs += _rec(
-                    _BOOLERR, struct.pack("<HHHBB", r, c, ixfe, int(v), 0)
-                )
-            elif isinstance(v, (int, float)) and not isinstance(v, bool):
-                as_f = float(v)
-                if isinstance(v, int) and abs(v) >= 2 ** 53:
-                    cell_recs += _rec(
-                        _LABELSST,
-                        struct.pack("<HHHI", r, c, ixfe, intern(str(v))),
-                    )
-                else:
-                    cell_recs += _rec(
-                        _NUMBER, struct.pack("<HHHd", r, c, ixfe, as_f)
-                    )
-            else:
-                cell_recs += _rec(
-                    _LABELSST,
-                    struct.pack("<HHHI", r, c, ixfe, intern(str(v))),
-                )
-
-    # Globals substream. BOUNDSHEET's lbPlyPos needs the final globals
-    # length, which depends on the SST — assemble SST first.
-    sst = _sst_records(sst_list, total_refs)
-    bof_globals = _rec(
-        _BOF, struct.pack("<HHHHII", 0x0600, 0x0005, 0x0DBB, 0x07CC, 0, 0)
-    )
-    codepage = _rec(0x0042, struct.pack("<H", 1200))
-    window1 = _rec(
-        0x003D, struct.pack("<HHHHHHHHH", 0x0168, 0x011E, 0x3A5C, 0x23BE,
-                            0x0038, 0, 0, 1, 0x0258)
-    )
-    font = _rec(
-        0x0031,
-        struct.pack("<HHHHHBBBB", 200, 0, 0x7FFF, 0x0190, 0, 0, 0, 0, 0)
-        + struct.pack("<BB", 5, 0) + b"Arial",
-    )
-    xfs = bytearray()
-    for i in range(16):
-        f_style = 0xFFF5 if i < 15 else 0x0001
-        xfs += _rec(
-            0x00E0,
-            struct.pack("<HHHBBBBIIH", 0, 0, f_style, 0x20, 0, 0, 0, 0, 0, 0x20C0),
-        )
-    sheet_name = b"Sheet1"
-    boundsheet_len = 4 + 2 + 1 + 1 + len(sheet_name)
-    globals_len = (
-        len(bof_globals) + len(codepage) + len(window1) + len(font)
-        + len(xfs) + 4 + boundsheet_len + len(sst) + 4  # +4s: rec headers
-    )
-    boundsheet = _rec(
-        _BOUNDSHEET,
-        struct.pack("<IHBB", globals_len, 0x0000, len(sheet_name), 0)
-        + sheet_name,
-    )
-    glob = (
-        bof_globals + codepage + window1 + font + bytes(xfs) + boundsheet
-        + sst + _rec(_EOF, b"")
-    )
-    assert len(glob) == globals_len, (len(glob), globals_len)
-
-    bof_sheet = _rec(
-        _BOF, struct.pack("<HHHHII", 0x0600, 0x0010, 0x0DBB, 0x07CC, 0, 0)
-    )
-    dimensions = _rec(
-        0x0200, struct.pack("<IIHHH", 0, n_rows, 0, n_cols, 0)
-    )
-    sheet = bof_sheet + dimensions + bytes(cell_recs) + _rec(_EOF, b"")
-    return glob + sheet
-
-
-def _dir_entry(name: str, obj_type: int, start: int, size: int,
-               left: int = _NOSTREAM, right: int = _NOSTREAM,
-               child: int = _NOSTREAM) -> bytes:
-    raw = name.encode("utf-16-le") + b"\x00\x00"
-    entry = bytearray(128)
-    entry[0:len(raw)] = raw
-    struct.pack_into("<H", entry, 64, len(raw))
-    entry[66] = obj_type
-    entry[67] = 1  # black
-    struct.pack_into("<III", entry, 68, left, right, child)
-    struct.pack_into("<I", entry, 116, start)
-    struct.pack_into("<Q", entry, 120, size)
-    return bytes(entry)
-
-
-def _free_dir_entry() -> bytes:
-    entry = bytearray(128)
-    struct.pack_into("<III", entry, 68, _NOSTREAM, _NOSTREAM, _NOSTREAM)
-    struct.pack_into("<I", entry, 116, _FREE)
-    return bytes(entry)
-
-
-def write_xls(path: str, header: list[str], rows: list[list]) -> None:
-    """Write (header, rows) as a single-sheet BIFF8 ``.xls``.
-
-    Mirrors ``xlsx.write_xlsx``'s contract: first row is the header;
-    str/int/float/bool/None are written natively, everything else as
-    ``str(value)``. Round-trips through :func:`read_xls` and external
-    BIFF8 consumers."""
-    biff = _biff_stream([str(h) for h in header], rows)
-
-    sectors: list[bytes] = []       # regular sectors, in order
-    fat: list[int] = []             # parallel FAT entries
-
-    def pad(b: bytes, size: int) -> bytes:
-        return b + b"\x00" * (-len(b) % size)
-
-    def add_chain(data: bytes) -> int:
-        """Append data as a chained run of regular sectors; returns start."""
-        chunks = [data[i:i + _SECTOR] for i in range(0, len(data), _SECTOR)] or [b""]
-        start = len(sectors)
-        for i, ch in enumerate(chunks):
-            sectors.append(pad(ch, _SECTOR))
-            fat.append(start + i + 1 if i + 1 < len(chunks) else _ENDOFCHAIN)
-        return start
-
-    use_mini = len(biff) < _MINI_CUTOFF
-    if use_mini:
-        # mini stream: BIFF chained through the miniFAT in 64-byte sectors
-        n_mini = max(1, -(-len(biff) // _MINI_SECTOR))
-        minifat_entries = [i + 1 for i in range(n_mini - 1)] + [_ENDOFCHAIN]
-        minifat_start = add_chain(
-            pad(b"".join(struct.pack("<I", e) for e in minifat_entries), _SECTOR)
-        )
-        mini_container = pad(biff, _MINI_SECTOR)
-        root_start = add_chain(mini_container)
-        root_size = len(mini_container)
-        wb_start, wb_size = 0, len(biff)   # mini-sector index 0
-        n_minifat_sectors = 1
-    else:
-        minifat_start = _ENDOFCHAIN
-        n_minifat_sectors = 0
-        wb_start = add_chain(biff)
-        wb_size = len(biff)
-        root_start, root_size = _ENDOFCHAIN, 0
-
-    directory = (
-        _dir_entry("Root Entry", 5, root_start, root_size, child=1)
-        + _dir_entry("Workbook", 2, wb_start, wb_size)
-        + _free_dir_entry() + _free_dir_entry()
-    )
-    dir_start = add_chain(directory)
-
-    # FAT sector(s) go last; they must also mark themselves.
-    n_data = len(sectors)
-    n_fat = 1
-    while (n_data + n_fat) > n_fat * (_SECTOR // 4):
-        n_fat += 1
-    if n_fat > 109:
-        raise ValueError(".xls writer: workbook too large for header DIFAT")
-    fat_start = n_data
-    full_fat = fat + [_FATSECT] * n_fat
-    full_fat += [_FREE] * (n_fat * (_SECTOR // 4) - len(full_fat))
-    fat_bytes = b"".join(struct.pack("<I", e) for e in full_fat)
-    for i in range(n_fat):
-        sectors.append(fat_bytes[i * _SECTOR:(i + 1) * _SECTOR])
-
-    head = bytearray(512)
-    head[0:8] = _OLE_MAGIC
-    struct.pack_into("<H", head, 24, 0x003E)      # minor version
-    struct.pack_into("<H", head, 26, 0x0003)      # major version (512B)
-    struct.pack_into("<H", head, 28, 0xFFFE)      # little-endian
-    struct.pack_into("<H", head, 30, 9)           # sector shift
-    struct.pack_into("<H", head, 32, 6)           # mini sector shift
-    struct.pack_into("<I", head, 44, n_fat)
-    struct.pack_into("<I", head, 48, dir_start)
-    struct.pack_into("<I", head, 56, _MINI_CUTOFF)
-    struct.pack_into("<I", head, 60, minifat_start)
-    struct.pack_into("<I", head, 64, n_minifat_sectors)
-    struct.pack_into("<I", head, 68, _ENDOFCHAIN)  # no DIFAT sectors
-    struct.pack_into("<I", head, 72, 0)
-    for i in range(109):
-        struct.pack_into(
-            "<I", head, 76 + 4 * i, fat_start + i if i < n_fat else _FREE
-        )
-
-    with open(path, "wb") as f:
-        f.write(bytes(head))
-        for s in sectors:
-            f.write(s)

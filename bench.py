@@ -40,7 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     # Pre-touch the pinned heap at JVM start (session.py:
-    # _driver_java_options): the bench session is long-lived (144 queries
+    # _driver_java_options): the bench session is long-lived (143 queries
     # × reps + probe stages), so the one-time ~20 s zeroing replaces
     # random mid-query first-touch storms (measured 324 s stime in one
     # such rep) that min-of-reps cannot always absorb. Untimed: the

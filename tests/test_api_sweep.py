@@ -185,7 +185,7 @@ def test_get_session_exports_repo_root_to_worker_pythonpath(spark):
     re-import; workers read PYTHONPATH from the environment, not the
     driver's sys.path. get_session must therefore export the package
     root — the bug showed as worker-side ModuleNotFoundError on every
-    PQ/avro query when bench.py ran from a foreign cwd."""
+    PQ query when bench.py ran from a foreign cwd."""
     import os
 
     import astro_sdk_spark

@@ -85,9 +85,6 @@ PY_BOUNDARY_WHITELIST = {
     "q_ann_lsh": 2,
     "q_pq_topk": 2,
     "q_ann_recall": 2,       # exact + LSH subtrees may both materialize
-    "q_load_avro": 1,        # the Avro block decoder itself (mapInPandas) —
-                             # the whole point of the dependency-free read
-                             # path; Arrow-batched, one boundary
     "q_bloom_dedup": 2,      # bitmap probe (vectorized bitset test) — the
                              # broadcast-bloom alternative to a corpus-sized
                              # shuffle; may appear under both union branches

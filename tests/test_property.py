@@ -1,6 +1,7 @@
 """Property-based tests (hypothesis) for the pure-Python parity layers:
 SQL literal rendering, xlsx round-trips, column-letter arithmetic,
-identifier validation. These run without a SparkSession."""
+identifier validation (the .xls reader's property test lives in
+test_xls.py, beside its BIFF8 file builder). These run without a SparkSession."""
 
 from __future__ import annotations
 
@@ -118,127 +119,3 @@ def test_xlsx_roundtrip_property(tmp_path_factory, cols_rows):
                 assert math.isclose(float(g), e, rel_tol=0, abs_tol=0) or float(g) == e
             else:
                 assert g == e, (g, e)
-
-
-# ---------------------------------------------------------------- xls writer
-
-_cell = st.one_of(
-    st.none(),
-    st.booleans(),
-    st.integers(min_value=-(2 ** 52), max_value=2 ** 52),
-    st.floats(allow_nan=False, allow_infinity=False, width=64),
-    st.text(max_size=40),
-)
-
-
-@given(
-    st.integers(min_value=1, max_value=5).flatmap(
-        lambda ncols: st.tuples(
-            st.lists(
-                st.text(
-                    alphabet=st.characters(
-                        blacklist_categories=("Cs",), min_codepoint=32
-                    ),
-                    min_size=1,
-                    max_size=12,
-                ),
-                min_size=ncols,
-                max_size=ncols,
-            ),
-            st.lists(
-                st.lists(_cell, min_size=ncols, max_size=ncols),
-                max_size=8,
-            ),
-        )
-    )
-)
-@settings(max_examples=40, deadline=None)
-def test_xls_write_read_round_trip(header_rows):
-    import os
-    import tempfile
-
-    from astro_sdk_spark.xls import read_xls, write_xls
-
-    header, rows = header_rows
-    fd, path = tempfile.mkstemp(suffix=".xls")
-    os.close(fd)
-    try:
-        write_xls(path, header, rows)
-        h2, r2 = read_xls(path)
-        # reader infers width from the rightmost populated cell; trailing
-        # all-None columns (and all-None tail rows) legitimately collapse
-        assert h2 == header[: len(h2)]
-        assert len(r2) <= len(rows)
-        for got, exp in zip(r2, rows):
-            for g, e in zip(got, exp[: len(got)]):
-                if isinstance(e, float) and g is not None:
-                    assert float(g) == e
-                elif isinstance(e, str):
-                    # headers/cells survive as written
-                    assert g == e or (g is None and e == "")
-                else:
-                    assert g == e
-    finally:
-        os.unlink(path)
-
-
-# ---------------------------------------------------------------- avro codec
-
-_AVRO_SCHEMA = {
-    "type": "record",
-    "name": "r",
-    "fields": [
-        {"name": "i", "type": "long"},
-        {"name": "s", "type": ["null", "string"]},
-        {"name": "d", "type": "double"},
-        {"name": "f", "type": "float"},
-        {"name": "bl", "type": "boolean"},
-        {"name": "by", "type": "bytes"},
-        {"name": "arr", "type": {"type": "array", "items": "long"}},
-        {"name": "m", "type": {"type": "map", "values": "string"}},
-    ],
-}
-
-_avro_row = st.fixed_dictionaries(
-    {
-        "i": st.integers(min_value=-(2**63), max_value=2**63 - 1),
-        "s": st.none() | st.text(max_size=40),
-        "d": st.floats(allow_nan=False, allow_infinity=True, width=64),
-        "f": st.floats(allow_nan=False, allow_infinity=True, width=32),
-        "bl": st.booleans(),
-        "by": st.binary(max_size=64),
-        "arr": st.lists(st.integers(min_value=-(2**40), max_value=2**40), max_size=8),
-        "m": st.dictionaries(st.text(max_size=8), st.text(max_size=8), max_size=4),
-    }
-)
-
-
-@given(
-    rows=st.lists(_avro_row, max_size=60),
-    block=st.integers(min_value=1, max_value=17),
-    codec=st.sampled_from(["null", "deflate"]),
-    step=st.integers(min_value=37, max_value=5000),
-)
-@settings(max_examples=60, deadline=None)
-def test_avro_round_trip_and_split_scan(tmp_path_factory, rows, block, codec, step):
-    """Any record set round-trips byte-exactly through the container
-    (zigzag extremes, unicode, ±inf, empty collections), and an arbitrary
-    byte-range split decodes every record exactly once."""
-    import os
-
-    from astro_sdk_spark.avro import decode_range, read_avro, read_header, write_avro
-
-    p = str(tmp_path_factory.mktemp("avro") / "t.avro")
-    write_avro(p, rows, _AVRO_SCHEMA, codec=codec, block_records=block)
-    _, back = read_avro(p)
-    assert back == rows
-
-    with open(p, "rb") as f:
-        schema, cd, sync, he = read_header(f)
-    file_len = os.path.getsize(p)
-    got, s = [], he
-    while s < file_len:
-        e = min(file_len, s + step)
-        got += list(decode_range(p, s, e, he, schema, cd, sync))
-        s = e
-    assert got == rows

@@ -8,12 +8,23 @@ from __future__ import annotations
 
 import pytest
 
-from astro_sdk_spark.session import _driver_java_options
+from astro_sdk_spark.session import _driver_java_options, _heap_gb
 
 
 @pytest.fixture(autouse=True)
 def _clean_env(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_PRETOUCH", raising=False)
+
+
+def test_heap_follows_available_memory_on_a_16_gib_host():
+    """A 16 GiB host (MemTotal 16,479,424 kB) gets its budget, not a
+    floor above it: min(0.5 * avail, 0.35 * total) is 5 GiB when idle,
+    and a second session that finds 6 GiB left gets 3 GiB."""
+    total = 16_479_424
+    assert _heap_gb(total, 15_864_940) == 5
+    assert _heap_gb(total, 6 * 1024 * 1024) == 3
+    assert _heap_gb(total, 1024 * 1024) == 2        # 2g floor
+    assert _heap_gb(128 * 1024 * 1024, 120 * 1024 * 1024) == 16  # 16g cap
 
 
 def test_heap_pin_always_present():

@@ -74,7 +74,6 @@ FAMILIES: dict[str, list[str]] = {
         "q_embedding_topk", "q_ann_recall", "q_ann_lsh", "q_sq8_topk",
         "q_hard_negatives",
     ],
-    "file-formats": ["q_load_avro"],
     "ivf-pq": [
         "q_ivf_topk", "q_ivf_trained", "q_ivfpq_topk", "q_pq_topk",
         "q_ivfpq_trained", "q_ann_persist", "q_annpq_persist",

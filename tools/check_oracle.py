@@ -164,7 +164,7 @@ def main():
 
         from astro_sdk_spark import get_session
 
-        # long-lived session (144 queries + 144 DuckDB oracles): pay the
+        # long-lived session (143 queries + 143 DuckDB oracles): pay the
         # one-time heap pre-touch instead of mid-sweep first-touch storms
         os.environ.setdefault("SPARK_GRAFT_PRETOUCH", "1")
         spark = get_session(shuffle_partitions=16)

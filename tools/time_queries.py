@@ -7,7 +7,7 @@ The methodology mirrors bench.py's (warm at sf0.001 first, count() the
 result, clearCache + release intermediates between reps) so numbers are
 comparable to the headline artifact; the calibration probe bounds host
 noise per run. Used for the round's before/after evidence on targeted
-optimizations without paying a full 144-query sweep per iteration.
+optimizations without paying a full 143-query sweep per iteration.
 """
 
 from __future__ import annotations
