@@ -159,6 +159,89 @@ def refuse_orphaned_location(spark: SparkSession, qualified_name: str) -> None:
         )
 
 
+# ------------------------------------------------------- staged rewrites
+# Every writer that replaces a whole table (merge 'update', merge_scd2,
+# compact_table, publish_table, the rollup refresh and the sketch store)
+# builds the new contents beside the target and then swaps them in: the
+# finish step of the reference's Redshift merge strategy
+# (``python-sdk/src/astro/databases/aws/redshift.py:169-307``). The
+# staging name is ``<target>__staging``, so it sits in the target's
+# database and a killed run's leftovers are reclaimed by the next one.
+def _staging_name(target: str) -> str:
+    return f"{target}__staging"
+
+
+def stage_table(
+    spark: SparkSession,
+    df: DataFrame,
+    target: str,
+    partition_by: Sequence[str] | None = None,
+) -> str:
+    """Write ``df`` as parquet to ``<target>__staging`` (partitioned by
+    ``partition_by`` when given) and return that name. Whatever a killed
+    run left under the staging name goes first."""
+    staging = _staging_name(target)
+    drop_managed_table(spark, staging)
+    writer = df.write.format("parquet")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.saveAsTable(staging)
+    return staging
+
+
+def swap_table(spark: SparkSession, target: str) -> None:
+    """Make ``target`` hold the contents :func:`stage_table` staged for it.
+
+    ``DROP TABLE`` + ``ALTER TABLE RENAME``: one table-sized write (the
+    staging) plus a metadata/directory move. When the RENAME fails after
+    the target was dropped, the staged contents are written back under
+    the target name (retrying the same rename would fail identically and
+    mask the original error). After return the target exists with the
+    staged contents and the staging table is gone.
+
+    Two staged rewrites of the same target at the same time are not
+    supported: both would DROP and RENAME the same staging name.
+    """
+    staging = _staging_name(target)
+    sq = quote_identifier(staging)
+    tq = quote_identifier(target)
+    # a PARTITIONED staging table loses its partition metadata across
+    # RENAME (the catalog re-points the location but not the partition
+    # entries — the renamed table scans as empty); detect before the swap
+    # and repair after (measured on the in-memory catalog, Spark 4.x)
+    try:
+        partitioned = bool(spark.sql(f"SHOW PARTITIONS {sq}").head(1))
+    except Exception:  # noqa: BLE001 - non-partitioned tables raise
+        partitioned = False
+    try:
+        # an orphaned target location would make the RENAME fail
+        drop_managed_table(spark, target)
+        spark.sql(f"ALTER TABLE {sq} RENAME TO {tq}")
+    except Exception:
+        # the target was dropped but the rename failed: the staging still
+        # holds the full post-swap contents — restore by writing it back
+        if spark.catalog.tableExists(target) or not spark.catalog.tableExists(staging):
+            raise
+        spark.table(staging).write.mode("overwrite").format("parquet").saveAsTable(target)
+        spark.sql(_DROP.format(table=sq))
+        return
+    # the rename has COMMITTED at this point: a failure below must not
+    # read as "the swap failed" (the target exists, staging is gone) —
+    # repair partition metadata in its own recovery block instead
+    if partitioned:
+        try:
+            spark.sql(f"MSCK REPAIR TABLE {tq}")
+        except Exception as msck_err:  # noqa: BLE001
+            try:
+                spark.catalog.recoverPartitions(target)
+            except Exception:  # noqa: BLE001
+                raise RuntimeError(
+                    f"table swap to {target!r} SUCCEEDED but "
+                    f"partition metadata recovery failed; run "
+                    f"'MSCK REPAIR TABLE {tq}' manually before querying"
+                ) from msck_err
+
+
 # ------------------------------------------------------------------- avro
 @contextmanager
 def avro_source(spark: SparkSession):
@@ -574,8 +657,8 @@ class SparkEngine:
         locality, so predicates on EACH of them skip files. Mutually
         exclusive with ``sort_by``.
 
-        Unpartitioned tables rewrite whole: stage into a temp table, go
-        live via the merge machinery's atomic DROP+RENAME swap — readers
+        Unpartitioned tables rewrite whole: stage beside the table, go
+        live via the DROP+RENAME swap (:func:`swap_table`) — readers
         never see a partial table. Partitioned tables compact ONE
         partition at a time: pass ``partitions={"p": value, ...}`` and
         the rewrite becomes a dynamic-partition INSERT OVERWRITE of
@@ -660,12 +743,8 @@ class SparkEngine:
                 after_df = after_df.filter(F.col(col_name) == F.lit(val))
             files_after = _file_count(after_df)
         else:
-            staging = f"{qname}__compact_staging"
-            drop_managed_table(self.spark, staging)
-            compacted.write.format("parquet").saveAsTable(staging)
-            from astro_sdk_spark.operators.swap import swap_table
-
-            swap_table(self.spark, staging, qname)
+            stage_table(self.spark, compacted, qname)
+            swap_table(self.spark, qname)
             files_after = _file_count(self.spark.table(qname))
         return {
             "files_before": files_before,

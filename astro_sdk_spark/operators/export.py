@@ -57,15 +57,27 @@ def export_to_file(
 
     emit("export_to_file", inputs=[_name_of(input_data)], outputs=[_name_of(output_file)])
     path = output_file.path.removeprefix("file://")
-    if os.path.exists(path):
-        if if_exists == "exception":
-            raise FileExistsError(f"{output_file.path} already exists and if_exists='exception'")
+    if if_exists == "exception" and os.path.exists(path):
+        raise FileExistsError(f"{output_file.path} already exists and if_exists='exception'")
+    # the finished file is built in a temp dir and replaces the target only
+    # once complete: a write that raises leaves an existing target intact
+    tmpdir = tempfile.mkdtemp(prefix="astro_export_")
+    try:
+        staged = _write_single_file(df, output_file, tmpdir)
         if os.path.isdir(path):
             shutil.rmtree(path)
-        else:
-            os.remove(path)
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+        shutil.move(staged, path)
+    finally:
+        shutil.rmtree(tmpdir, ignore_errors=True)
+    return output_file
 
+
+def _write_single_file(df: DataFrame, output_file: File, tmpdir: str) -> str:
+    """Write ``df`` as one complete ``output_file.type`` file inside
+    ``tmpdir`` and return its path."""
+    staged = os.path.join(tmpdir, "file")
+    out_dir = os.path.join(tmpdir, "out")
     ftype = output_file.type
     if ftype == FileType.XLSX:
         # driver-side small-file path (reference files/types/excel.py);
@@ -83,14 +95,12 @@ def export_to_file(
             )
         from astro_sdk_spark.xlsx import write_xlsx
 
-        write_xlsx(path, df.columns, [tuple(r) for r in df.collect()])
-        return output_file
+        write_xlsx(staged, df.columns, [tuple(r) for r in df.collect()])
+        return staged
 
-    tmpdir = tempfile.mkdtemp(prefix="astro_export_")
-    out_dir = os.path.join(tmpdir, "out")
     writer = df.coalesce(1).write.mode("overwrite")
     # honor a compression suffix on text exports (x.ndjson.gz → gzip codec)
-    comp_ext = os.path.splitext(path)[1].lower()
+    comp_ext = os.path.splitext(output_file.path)[1].lower()
     codec = {
         ".gz": "gzip", ".bz2": "bzip2", ".zst": "zstd",
         ".lz4": "lz4", ".snappy": "snappy", ".deflate": "deflate",
@@ -117,7 +127,7 @@ def export_to_file(
         writer.orc(out_dir)
         pattern = "part-*.orc"
     elif ftype == FileType.AVRO:
-        with avro_source(eng.spark):
+        with avro_source(df.sparkSession):
             writer.format("avro").save(out_dir)
         pattern = "part-*.avro"
     elif ftype in (FileType.NDJSON, FileType.JSON):
@@ -127,20 +137,19 @@ def export_to_file(
         raise ValueError(f"Unsupported export type: {ftype}")
     parts = glob.glob(os.path.join(out_dir, pattern))
     if not parts:  # empty DataFrame writes no part file for csv/json
-        open(path, "w").close()
+        open(staged, "w").close()
     else:
-        shutil.move(parts[0], path)
-    shutil.rmtree(tmpdir, ignore_errors=True)
+        shutil.move(parts[0], staged)
 
     if ftype == FileType.JSON:
         # reference JSON export is an array of records (to_json
         # orient="records", files/types/json.py:41-55); Spark writes ndjson —
         # convert on the driver for parity.
-        with open(path) as fh:
+        with open(staged) as fh:
             lines = [ln for ln in fh.read().splitlines() if ln.strip()]
-        with open(path, "w") as fh:
+        with open(staged, "w") as fh:
             fh.write("[" + ",".join(lines) + "]")
-    return output_file
+    return staged
 
 
 def export_to_dir(

@@ -35,11 +35,10 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from astro_sdk_spark.engine import SparkEngine
+from astro_sdk_spark.engine import SparkEngine, stage_table, swap_table
 from astro_sdk_spark.operators.append import normalize_columns
-from astro_sdk_spark.operators.swap import swap_table
 from astro_sdk_spark.session import default_session
-from astro_sdk_spark.table import BaseTable, TempTable
+from astro_sdk_spark.table import BaseTable
 
 
 class MergeConflictException(RuntimeError):
@@ -293,16 +292,13 @@ def merge(
     # metadata/directory move, instead of writing the full table twice.
     # (On Delta this whole branch is a single transactional MERGE INTO;
     # for plain parquet the drop+rename window is non-atomic — on failure
-    # the data survives in the staging table and we attempt a restore.)
+    # the data survives in the staging table and engine.swap_table
+    # restores it.)
     # src_shaped is already target-shaped and key-deduped; the effective
     # map is {mapped target col -> itself} so unmapped columns still come
     # from the target side in merge_update_plan
     shaped_cmap = {t: t for t in cmap.values()}
     result = merge_update_plan(tgt, src_shaped, shaped_cmap, keys)
-
-    # staging lives in the TARGET's database so the swap is a same-database
-    # RENAME (Spark's session catalog rejects cross-database renames)
-    staging = TempTable(metadata=target_table.metadata)
-    result.write.mode("overwrite").format("parquet").saveAsTable(staging.qualified_name)
-    swap_table(s, staging.qualified_name, target_table.qualified_name)
+    stage_table(s, result, target_table.qualified_name)
+    swap_table(s, target_table.qualified_name)
     return target_table

@@ -7,12 +7,12 @@ pipeline must never let readers observe a half-written or failed-quality
 result. The composition is entirely out of parts this repo already
 verifies —
 
-1. **write** the DataFrame into ``<target>__wap_staged`` (readers of the
-   live table see nothing);
+1. **write** the DataFrame into the target's staging table with
+   :func:`engine.stage_table` (readers of the live table see nothing);
 2. **audit** the staged table with the data-validation operators
    (``check_table`` aggregate predicates and/or ``check_column``
    per-column stats — both single-scan, one-row results);
-3. **publish** via :func:`operators.swap.swap_table` (DROP+RENAME in the
+3. **publish** via :func:`engine.swap_table` (DROP+RENAME in the
    metastore — a metadata move, not a data copy) only when every check
    passed; on failure the staging table is dropped (or kept for
    debugging with ``keep_staging_on_fail``) and the live table is
@@ -25,7 +25,7 @@ missing table (already-resolved plans are unaffected). The guarantee
 publish_table does make is CRASH safety: a failure at any point leaves
 either the previous live table or the fully-staged new one, never a
 partial write — and the staged table survives a mid-swap crash for
-write-back recovery (operators/swap.py). Catalogs with an atomic
+write-back recovery (``engine.swap_table``). Catalogs with an atomic
 ``CREATE OR REPLACE`` / ``RENAME ... SWAP`` (Delta, Iceberg) close the
 visibility gap; route through their native command when deployed there.
 
@@ -39,8 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from astro_sdk_spark.engine import drop_managed_table
-from astro_sdk_spark.operators.swap import swap_table
+from astro_sdk_spark.engine import drop_managed_table, stage_table, swap_table
 from astro_sdk_spark.table import BaseTable, Table
 
 __all__ = ["publish_table"]
@@ -70,12 +69,7 @@ def publish_table(
         target_table if isinstance(target_table, BaseTable) else Table(name=target_table)
     )
     spark = spark or df.sparkSession
-    staged = Table(name=f"{target.name}__wap_staged", metadata=target.metadata)
-
-    # the staging name is owned by this operator: whatever a killed
-    # earlier run left under it (table or orphaned location) goes
-    drop_managed_table(spark, staged.qualified_name)
-    df.write.format("parquet").saveAsTable(staged.qualified_name)
+    staged = Table(name=stage_table(spark, df, target.qualified_name))
     try:
         if table_checks:
             check_table(staged, table_checks, spark=spark)
@@ -83,14 +77,10 @@ def publish_table(
             check_column(staged, column_checks, spark=spark)
     except Exception:
         if not keep_staging_on_fail:
-            drop_managed_table(spark, staged.qualified_name)
+            drop_managed_table(spark, staged.name)
         raise
-    swap_table(spark, staged.qualified_name, target.qualified_name)
+    swap_table(spark, target.qualified_name)
     from astro_sdk_spark.lineage import emit
 
-    emit(
-        "publish_table",
-        inputs=[staged.qualified_name],
-        outputs=[target.qualified_name],
-    )
+    emit("publish_table", inputs=[staged.name], outputs=[target.qualified_name])
     return target

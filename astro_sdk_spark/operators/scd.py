@@ -35,8 +35,8 @@ Catalyst rewrites full-outer + one-sided filters into separate
 Left/RightOuter joins per branch — measured as 2× input scans and 2×
 source dedup aggregates.) History rows are a scan-through union with no
 shuffle. The staged result goes live through
-the same atomic DROP+RENAME swap the type-1 update path uses
-(operators/swap.py). At 100 TB the dimension is usually the SMALL side —
+the same DROP+RENAME swap the type-1 update path uses
+(``engine.swap_table``). At 100 TB the dimension is usually the SMALL side —
 but nothing here assumes that: no broadcast, no collect, AQE free to pick
 the join strategy.
 """
@@ -46,9 +46,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from astro_sdk_spark.engine import SparkEngine
+from astro_sdk_spark.engine import SparkEngine, stage_table, swap_table
 from astro_sdk_spark.session import default_session
-from astro_sdk_spark.table import BaseTable, TempTable
+from astro_sdk_spark.table import BaseTable
 
 
 def scd2_plan(
@@ -177,11 +177,11 @@ def merge_scd2(
 ) -> BaseTable:
     """Apply a snapshot to an SCD2 history table in place.
 
-    Staged rewrite + atomic swap, exactly like ``merge(...,
-    if_conflicts='update')`` (operators/merge.py:201) — Spark cannot
-    overwrite a table it is reading, so the new history stages in the
-    target's database and goes live via DROP+RENAME with post-failure
-    restore (operators/swap.py:35).
+    Staged rewrite + swap, exactly like ``merge(...,
+    if_conflicts='update')`` — Spark cannot overwrite a table it is
+    reading, so the new history stages beside the target and goes live
+    via DROP+RENAME with post-failure restore
+    (``engine.stage_table`` / ``engine.swap_table``).
 
     ``partition_by`` lays the rewritten history out by validity era —
     the natural choice is ``[current_col]``, which puts the open (
@@ -197,11 +197,11 @@ def merge_scd2(
     silently rewritten: the parquet staged swap would REPLACE the table
     with a plain parquet one, destroying the transaction log. (The
     type-1 path routes those providers to a native single-statement
-    MERGE INTO, merge.py:174; SCD2 needs a multi-action MERGE + INSERT
-    transaction, which plain Spark SQL cannot express atomically —
-    drive the provider's own API with scd2_plan's output instead.)"""
+    MERGE INTO, ``merge._merge_native``; SCD2 needs a multi-action
+    MERGE + INSERT transaction, which plain Spark SQL cannot express
+    atomically — drive the provider's own API with scd2_plan's output
+    instead.)"""
     from astro_sdk_spark.operators.merge import table_provider
-    from astro_sdk_spark.operators.swap import swap_table
 
     eng = engine or SparkEngine(spark or default_session())
     sp = eng.spark
@@ -245,18 +245,14 @@ def merge_scd2(
         outputs=[_name_of(target_table)],
     )
 
-    staging = TempTable(metadata=target_table.metadata)
-    writer = result.write.mode("overwrite").format("parquet")
-    if partition_by:
-        missing = [c for c in partition_by if c not in result.columns]
-        if missing:
-            raise ValueError(
-                f"partition_by columns not in the SCD2 output: {missing} "
-                f"(have {result.columns})"
-            )
-        writer = writer.partitionBy(*partition_by)
-    writer.saveAsTable(staging.qualified_name)
-    swap_table(sp, staging.qualified_name, target_table.qualified_name)
+    missing = [c for c in partition_by or [] if c not in result.columns]
+    if missing:
+        raise ValueError(
+            f"partition_by columns not in the SCD2 output: {missing} "
+            f"(have {result.columns})"
+        )
+    stage_table(sp, result, target_table.qualified_name, partition_by)
+    swap_table(sp, target_table.qualified_name)
     return target_table
 
 

@@ -22,8 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from astro_sdk_spark.operators.swap import swap_table
-from astro_sdk_spark.table import BaseTable
+from astro_sdk_spark.engine import refuse_orphaned_location, stage_table, swap_table
 
 
 def time_bucket(ts_col, duration: str = "10 minutes") -> Column:
@@ -87,6 +86,7 @@ class ContinuousAggregate:
                 src = src.filter(F.col(self.ts_col) >= F.lit(high))
         fresh = self._aggregate(src)
         if not self._exists():
+            refuse_orphaned_location(self.spark, self.target_table)
             fresh.write.format("parquet").saveAsTable(self.target_table)
             return
         tgt = self.spark.table(self.target_table)
@@ -94,17 +94,8 @@ class ContinuousAggregate:
         # upsert = keep target buckets not being refreshed + all fresh rows
         # (the join rewrite from merge 'update', inlined: fresh rows win)
         untouched = tgt.join(fresh.select(*keys), on=keys, how="left_anti")
-        result = untouched.unionByName(fresh)
-        # unique staging name in the target's database: a fixed name would
-        # collide under concurrent refreshes and a crashed refresh would
-        # leave a stale table silently hidden by the next overwrite
-        if "." in self.target_table:
-            db, _ = self.target_table.rsplit(".", 1)
-            staging = f"{db}.{BaseTable._create_unique_table_name('_tmp_refresh')}"
-        else:
-            staging = BaseTable._create_unique_table_name("_tmp_refresh")
-        result.write.mode("overwrite").format("parquet").saveAsTable(staging)
-        swap_table(self.spark, staging, self.target_table)
+        stage_table(self.spark, untouched.unionByName(fresh), self.target_table)
+        swap_table(self.spark, self.target_table)
 
     def read(self) -> DataFrame:
         return self.spark.table(self.target_table)

@@ -22,8 +22,8 @@ The contract, explicitly:
   quantile ``width``/``value_scale``) are stored with the sketch and
   asserted on every merge — merging into a table built with different
   parameters would silently sum incompatible hash spaces / bucket grids.
-- **Atomic go-live**: the merged sketch stages into a side table and swaps
-  in via :func:`~astro_sdk_spark.operators.swap.swap_table`, so a crash
+- **Atomic go-live**: the merged sketch stages beside the table and swaps
+  in via :func:`~astro_sdk_spark.engine.swap_table`, so a crash
   mid-write leaves the previous sketch intact instead of losing the
   accumulated history.
 - **Empty-batch policy** (the round-6/7 poisoning bug, fixed here once):
@@ -186,15 +186,13 @@ def merge_sketch_batch(
             drop_managed_table,
             location_is_partial_write,
             refuse_orphaned_location,
+            stage_table,
+            swap_table,
         )
-        from astro_sdk_spark.operators.swap import swap_table
 
         if spark.catalog.tableExists(sketch_table):
-            # staging is an operator-generated name: drop whatever is there
-            staging = f"{sketch_table}__sketch_staging"
-            drop_managed_table(spark, staging)
-            out.write.format("parquet").saveAsTable(staging)
-            swap_table(spark, staging, sketch_table)
+            stage_table(spark, out, sketch_table)
+            swap_table(spark, sketch_table)
         else:
             # first creation of a USER-supplied name: self-heal ONLY when
             # the location holds partial-write debris of a killed run

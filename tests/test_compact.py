@@ -59,7 +59,7 @@ def test_compact_is_atomic_under_name(spark, engine, demo_table):
     engine.compact_table(demo_table, target_file_mb=128)
     assert spark.catalog.tableExists(demo_table.qualified_name)
     assert not spark.catalog.tableExists(
-        demo_table.qualified_name + "__compact_staging"
+        demo_table.qualified_name + "__staging"
     )
 
 

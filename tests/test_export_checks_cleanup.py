@@ -1,5 +1,7 @@
+import glob
 import json
 import os
+import tempfile
 
 import pytest
 
@@ -64,6 +66,20 @@ def test_avro_without_spark_avro_names_the_package(engine, nation, tmp_path):
         with pytest.raises(RuntimeError, match="org.apache.spark:spark-avro_2.13:") as exc:
             call()
         assert "spark.jars.packages" in str(exc.value)
+
+
+def test_failed_replace_export_keeps_existing_target(engine, nation, tmp_path):
+    """if_exists='replace' replaces the target only with a finished file:
+    a write that raises (here .avro without spark-avro) keeps the old
+    bytes and leaves no astro_export_* temp dir behind."""
+    out = tmp_path / "keep.avro"
+    out.write_bytes(b"old bytes")
+    pattern = os.path.join(tempfile.gettempdir(), "astro_export_*")
+    before = set(glob.glob(pattern))
+    with pytest.raises(RuntimeError, match="spark-avro"):
+        export_to_file(nation, File(str(out)), if_exists="replace", engine=engine)
+    assert out.read_bytes() == b"old bytes"
+    assert set(glob.glob(pattern)) - before == set()
 
 
 def test_export_exception_mode(engine, nation, tmp_path):

@@ -15,7 +15,7 @@ def _drop(spark, *names):
 
 
 def test_publish_passes_checks_and_swaps(spark):
-    _drop(spark, "wap_tgt", "wap_tgt__wap_staged")
+    _drop(spark, "wap_tgt", "wap_tgt__staging")
     df = spark.range(10).select(F.col("id"), (F.col("id") * 2).alias("v"))
     publish_table(
         df,
@@ -24,12 +24,12 @@ def test_publish_passes_checks_and_swaps(spark):
         column_checks={"id": {"null_check": {"equal_to": 0}}},
     )
     assert spark.table("wap_tgt").count() == 10
-    assert not spark.catalog.tableExists("wap_tgt__wap_staged")
+    assert not spark.catalog.tableExists("wap_tgt__staging")
     _drop(spark, "wap_tgt")
 
 
 def test_publish_failure_leaves_live_table_untouched(spark):
-    _drop(spark, "wap_tgt2", "wap_tgt2__wap_staged")
+    _drop(spark, "wap_tgt2", "wap_tgt2__staging")
     good = spark.range(5).select(F.col("id"), F.lit("ok").alias("tag"))
     publish_table(good, "wap_tgt2")
     bad = spark.range(0).select(F.col("id"), F.lit("bad").alias("tag"))
@@ -43,12 +43,12 @@ def test_publish_failure_leaves_live_table_untouched(spark):
     rows = spark.table("wap_tgt2")
     assert rows.count() == 5
     assert rows.filter(F.col("tag") == "bad").count() == 0
-    assert not spark.catalog.tableExists("wap_tgt2__wap_staged")
+    assert not spark.catalog.tableExists("wap_tgt2__staging")
     _drop(spark, "wap_tgt2")
 
 
 def test_publish_keep_staging_on_fail(spark):
-    _drop(spark, "wap_tgt3", "wap_tgt3__wap_staged")
+    _drop(spark, "wap_tgt3", "wap_tgt3__staging")
     bad = spark.range(3).select(F.col("id"), F.lit(None).cast("string").alias("tag"))
     with pytest.raises(ChecksFailedError):
         publish_table(
@@ -58,9 +58,9 @@ def test_publish_keep_staging_on_fail(spark):
             keep_staging_on_fail=True,
         )
     # staged copy preserved for debugging; target never created
-    assert spark.catalog.tableExists("wap_tgt3__wap_staged")
+    assert spark.catalog.tableExists("wap_tgt3__staging")
     assert not spark.catalog.tableExists("wap_tgt3")
-    _drop(spark, "wap_tgt3__wap_staged")
+    _drop(spark, "wap_tgt3__staging")
 
 
 def test_publish_first_time_creates_target(spark):

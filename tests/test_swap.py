@@ -1,17 +1,17 @@
-"""swap_table helper + the merge/rollup swap hardening.
+"""engine.swap_table + the merge/rollup swap hardening.
 
 Covers the failure window the reference's Redshift staged rewrite handles
-transactionally (``databases/aws/redshift.py:169-307``): cross-database
-targets (Spark's catalog rejects cross-db RENAME), a rename failing after
-the target was dropped (restore via write-back, not a doomed rename retry),
-and concurrent-safe unique staging names for the rollup refresh.
+transactionally (``databases/aws/redshift.py:169-307``): a rename failing
+after the target was dropped (restore via write-back, not a doomed rename
+retry), staging in a schema-qualified target's own database, and a rollup
+refresh whose rename fails.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 from astro_sdk_spark import Table, merge
-from astro_sdk_spark.operators.swap import swap_table
+from astro_sdk_spark.engine import swap_table
 from astro_sdk_spark.streaming.rollup import ContinuousAggregate
 from astro_sdk_spark.table import Metadata
 
@@ -22,26 +22,16 @@ def _mk(spark, name, rows):
 
 def test_swap_same_database(spark):
     _mk(spark, "swap_tgt", [(1, "old")])
-    _mk(spark, "swap_stg", [(2, "new")])
-    swap_table(spark, "swap_stg", "swap_tgt")
+    _mk(spark, "swap_tgt__staging", [(2, "new")])
+    swap_table(spark, "swap_tgt")
     assert [r.v for r in spark.table("swap_tgt").collect()] == ["new"]
-    assert not spark.catalog.tableExists("swap_stg")
+    assert not spark.catalog.tableExists("swap_tgt__staging")
     spark.sql("DROP TABLE IF EXISTS swap_tgt")
-
-
-def test_swap_cross_database_falls_back_to_write_back(spark):
-    spark.sql("CREATE DATABASE IF NOT EXISTS swapdb")
-    _mk(spark, "swapdb.swap_tgt", [(1, "old")])
-    _mk(spark, "swap_stg2", [(2, "new")])
-    swap_table(spark, "swap_stg2", "swapdb.swap_tgt")
-    assert [r.v for r in spark.table("swapdb.swap_tgt").collect()] == ["new"]
-    assert not spark.catalog.tableExists("swap_stg2")
-    spark.sql("DROP DATABASE swapdb CASCADE")
 
 
 def test_swap_restores_target_when_rename_fails(spark, monkeypatch):
     _mk(spark, "swap_tgt3", [(1, "old")])
-    _mk(spark, "swap_stg3", [(2, "new")])
+    _mk(spark, "swap_tgt3__staging", [(2, "new")])
     real_sql = spark.sql
 
     def failing_sql(query, *a, **k):
@@ -50,11 +40,11 @@ def test_swap_restores_target_when_rename_fails(spark, monkeypatch):
         return real_sql(query, *a, **k)
 
     monkeypatch.setattr(spark, "sql", failing_sql)
-    swap_table(spark, "swap_stg3", "swap_tgt3")
+    swap_table(spark, "swap_tgt3")
     monkeypatch.undo()
     # target survives with the staged (post-swap) contents, staging cleaned up
     assert [r.v for r in spark.table("swap_tgt3").collect()] == ["new"]
-    assert not spark.catalog.tableExists("swap_stg3")
+    assert not spark.catalog.tableExists("swap_tgt3__staging")
     spark.sql("DROP TABLE IF EXISTS swap_tgt3")
 
 
@@ -98,9 +88,8 @@ def test_rollup_refresh_survives_failed_rename(spark, monkeypatch, tmp_path):
     monkeypatch.undo()
     after = {(r.event_type, r.n) for r in ca.read().collect()}
     assert after == before  # contents survived the failed rename
-    # no stale staging tables left behind
-    leftovers = [t.name for t in spark.catalog.listTables() if "_tmp_refresh" in t.name]
-    assert leftovers == []
+    # no stale staging table left behind
+    assert not spark.catalog.tableExists("rollup_swap_t__staging")
     spark.sql("DROP TABLE IF EXISTS rollup_swap_t")
 
 

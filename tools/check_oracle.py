@@ -15,11 +15,12 @@ evaluation is never interrupted.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -126,7 +127,6 @@ def main():
     # (below sf0.01, selective queries may legitimately match nothing —
     # parse the scale factor out of the directory name rather than
     # string-matching one specific suffix).
-    import os
     import re
 
     vacuous_ok = set(VACUOUS_OK)
@@ -160,8 +160,6 @@ def main():
             .getOrCreate()
         )
     else:
-        import os
-
         from astro_sdk_spark import get_session
 
         # long-lived session (143 queries + 143 DuckDB oracles): pay the

@@ -26,11 +26,12 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import os
 import sys
 from datetime import date, datetime, time
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

@@ -29,9 +29,10 @@ query's plan fails to build.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # The parser core now lives in the library (astro_sdk_spark.plan_audit)
 # so user pipelines can assert their own plan shapes; this tool keeps
