@@ -222,7 +222,13 @@ def swap_table(spark: SparkSession, target: str) -> None:
         # holds the full post-swap contents — restore by writing it back
         if spark.catalog.tableExists(target) or not spark.catalog.tableExists(staging):
             raise
-        spark.table(staging).write.mode("overwrite").format("parquet").saveAsTable(target)
+        # keep the staging's partitioning (listColumns runs Spark jobs,
+        # so it is asked only on this failure path)
+        parts = [c.name for c in spark.catalog.listColumns(staging) if c.isPartition]
+        (
+            spark.table(staging).write.mode("overwrite").format("parquet")
+            .partitionBy(*parts).saveAsTable(target)
+        )
         spark.sql(_DROP.format(table=sq))
         return
     # the rename has COMMITTED at this point: a failure below must not

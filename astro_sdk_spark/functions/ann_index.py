@@ -41,6 +41,14 @@ the consistent new answer — never empty, never an error, never a
 cross-generation mix, because all three scans derive their generation
 from the same single meta row.
 
+Quantizer cache (_quantizer): centroid and codebook rows of a generation
+are append-only and never rewritten, so each process keeps the live
+quantizer of every index it served, keyed on the winning meta row's FILE
+and generation. A warm request or micro-batch reads only the meta row
+for the centroids and codebooks; a retrain (new meta row), a rebuild, a
+rewritten meta table or the same name in another database or warehouse
+changes that key and refills.
+
 Determinism contract: assignment/probing/rescoring round before every
 rank and break ties on ascending id — identical to ivf_topk / ivfpq_topk,
 so an incrementally-built index answers queries bit-for-bit like a
@@ -56,9 +64,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from astro_sdk_spark.functions.similarity import (
+    _assign_nearest,
     _nearest_centroid_ids,
     cosine_similarity_col,
-    nearest_centroids,
 )
 
 __all__ = [
@@ -79,6 +87,10 @@ _ROUND_DIGITS = 4
 # filesystem operation (a hyphen/space/quote would otherwise break the
 # DROP statement, and a crafted name could point the scrub elsewhere)
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+
+# index name -> ((meta file, generation), (centroid rows, cent_id type,
+# codebooks)): at most one live quantizer per name, see _quantizer
+_QUANTIZERS: dict = {}
 
 
 def _check_name(name: str) -> None:
@@ -106,14 +118,19 @@ def _read_meta(spark: SparkSession, name: str) -> dict:
     build/retrain); taking max(generation) is what makes retrain's
     go-live a single parquet append — a reader sees the old max or the
     new max, never a half-committed state. Pre-generation indexes
-    (written before the gen columns existed) read as generation 0."""
+    (written before the gen columns existed) read as generation 0.
+
+    ``_file`` is the parquet file the winning row was read from (same
+    job): with the generation, it is the quantizer cache's identity."""
     meta_t = _tables(name)[2]
     if not spark.catalog.tableExists(meta_t):
         raise ValueError(f"ANN index {name!r} does not exist (no {meta_t})")
     t = spark.table(meta_t)
+    cols = t.columns
+    t = t.select("*", F.col("_metadata.file_path").alias("_file"))
     row = (
         t.orderBy(F.desc("generation")).head()
-        if "generation" in t.columns
+        if "generation" in cols
         else t.head()
     )
     if row is None:
@@ -134,25 +151,74 @@ def _live(df: DataFrame, gen: int) -> DataFrame:
     return df if int(gen) == 0 else df.filter(F.lit(False))
 
 
-def _read_codebooks(spark: SparkSession, name: str, meta: dict):
-    cb_t = _tables(name)[3]
-    # bind to the caller's meta-row generation — the SAME row that binds
-    # the centroid and lists scans, so one atomically-appended meta row
-    # pins all three tables to one generation (no cross-generation mix
-    # is constructible); a crashed/half-written generation fails LOUDLY
-    # on the row-count check below
-    rows = _live(spark.table(cb_t), meta["generation"]).collect()
-    m, k = meta["pq_m"], meta["pq_k"]
-    if len(rows) != m * k:
+def _read_centroids(spark: SparkSession, name: str, meta: dict):
+    """``(rows, cent_id type)`` of the generation ``meta`` names: one
+    collect of the contractually small centroid set, checked against
+    meta's geometry (a hand-deleted generation fails loudly here)."""
+    g = int(meta["generation"])
+    cent = _live(spark.table(_tables(name)[0]), g).select("cent_id", "vec")
+    rows = cent.collect()
+    c_n = len(rows)
+    c_d = max((len(r.vec) for r in rows), default=None)
+    if c_n == 0 or c_d != meta["dim"]:
         raise ValueError(
-            f"ANN index {name!r}: codebook table holds {len(rows)} rows "
-            f"for generation {meta['generation']}, expected "
-            f"m×k = {m}×{k} — the index is corrupt (a retrain that "
-            f"crashed mid-append never commits a meta row, so this "
-            f"should be unreachable; rebuild with build_ann_index)"
+            f"ANN index {name!r}: generation {g} centroids are "
+            f"inconsistent with meta ({c_n} rows, dim {c_d} vs "
+            f"meta dim {meta['dim']}) — the index is corrupt; rebuild "
+            f"with build_ann_index"
         )
-    by_sj = {(r.s, r.j): list(r.vec) for r in rows}
-    return [[by_sj[(s, j)] for j in range(k)] for s in range(m)]
+    return rows, cent.schema["cent_id"].dataType
+
+
+def _quantizer(spark: SparkSession, name: str, meta: dict):
+    """``(centroid rows, cent_id type, codebooks)`` of the generation
+    ``meta`` names; ``codebooks`` is an ``(m, k, dsub)`` ndarray for a PQ
+    index, else None.
+
+    Served from a per-process cache keyed on ``(meta["_file"],
+    generation)``. Within a generation, centroid and codebook rows are
+    append-only and never rewritten (compaction touches only the lists),
+    so an entry cannot go stale while its meta row is live. Output file
+    names carry the writing job's UUID, so a drop and rebuild under the
+    same name (which restarts at generation 0), a rewritten meta table,
+    and the same name in another database or warehouse all change the
+    key; a retrain changes the generation. Both scans bind to ``meta``'s
+    generation, the same row that binds the lists scan, so no
+    cross-generation mix is constructible.
+
+    The geometry guards run on every fill, before anything is stored:
+    a corrupt generation fails on its first read in a process. Rows
+    deleted by hand AFTER a fill are not re-detected. At most one entry
+    per index name, replaced whole by one dict assignment (safe from a
+    stream's foreachBatch thread); drop_ann_index evicts it. A ``meta``
+    without ``_file`` (not read back from the table) is never stored."""
+    key = (meta.get("_file"), int(meta["generation"]))
+    hit = _QUANTIZERS.get(name)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    cent_rows, cent_type = _read_centroids(spark, name, meta)
+    codebooks = None
+    if meta["kind"] == "pq":
+        import numpy as np
+
+        rows = _live(spark.table(_tables(name)[3]), key[1]).collect()
+        m, k = meta["pq_m"], meta["pq_k"]
+        if len(rows) == m * k:
+            codebooks = np.full((m, k, len(rows[0].vec)), np.nan)
+            for r in rows:
+                codebooks[r.s, r.j] = r.vec
+        if len(rows) != m * k or np.isnan(codebooks).any():
+            raise ValueError(
+                f"ANN index {name!r}: codebook table holds {len(rows)} "
+                f"rows for generation {key[1]}, expected m×k = {m}×{k} "
+                f"distinct (s, j) cells — the index is corrupt (a retrain "
+                f"that crashed mid-append never commits a meta row, so "
+                f"this should be unreachable; rebuild with build_ann_index)"
+            )
+    entry = (cent_rows, cent_type, codebooks)
+    if key[0] is not None:
+        _QUANTIZERS[name] = (key, entry)
+    return entry
 
 
 def _one_slice(spark: SparkSession, rows: list):
@@ -321,7 +387,11 @@ def ann_index_add(
     encode) against the STORED centroids/codebooks — the corpus lists are
     never rescanned. With ``dedupe`` (default), ids already in the index
     are skipped, making re-adds idempotent — the anti-join touches only
-    the lists table's id column (column-pruned scan)."""
+    the lists table's id column (column-pruned scan).
+
+    The stored quantizer comes from the per-generation cache (see
+    _quantizer): after the first add or top-k of a generation in this
+    process, an add reads no centroid or codebook rows."""
     _check_name(name)
     meta = _read_meta(spark, name)  # existence + geometry check
     _append_assigned(spark, batch, name, id_col, vec_col, dedupe=dedupe, meta=meta)
@@ -339,11 +409,15 @@ def _append_assigned(
     codebooks=None,
 ) -> None:
     # ``codebooks``: the in-memory [m][k][dsub] values when the caller
-    # (build) just wrote them — skips the table read-back collect; adds
-    # from a fresh session still read the stored generation-bound rows
-    cent_t, lists_t, _, _ = _tables(name)
+    # (build, retrain) is writing them beside this call — only the
+    # centroids are read back; every other add takes the cached quantizer
+    _, lists_t, _, _ = _tables(name)
     if meta is None:
         meta = _read_meta(spark, name)
+    if codebooks is None:
+        cent_rows, cent_type, codebooks = _quantizer(spark, name, meta)
+    else:
+        cent_rows, cent_type = _read_centroids(spark, name, meta)
     # geometry guard folded INTO the assignment job (no per-batch extra
     # Spark action — this runs per micro-batch on an unbounded stream),
     # and row-level: EVERY vector is checked, so a mixed-dimension batch
@@ -377,19 +451,18 @@ def _append_assigned(
             "cand_id",
             "left_anti",
         )
-    assigned = nearest_centroids(
+    # the quantizer is bound to the caller's meta generation: during a
+    # retrain the centroid table legitimately holds two generations, and
+    # a stale writer must keep assigning against the quantizer its meta
+    # row describes (those rows stay self-consistent and invisible), not
+    # against a mixed set
+    assigned = _assign_nearest(
         vecs,
-        # bind the quantizer to the caller's meta generation: during a
-        # retrain the centroid table legitimately holds two generations,
-        # and a stale writer must keep assigning against the quantizer
-        # its meta row describes (those rows stay self-consistent and
-        # invisible), not against a mixed set
-        _live(spark.table(cent_t), gen),
+        cent_rows,
+        cent_type.simpleString(),
         id_col="cand_id",
         vec_col="vec",
         n=1,
-        cent_id_col="cent_id",
-        cent_vec_col="vec",
         round_digits=meta["round_digits"],
     )
     if meta["kind"] == "pq":
@@ -398,8 +471,7 @@ def _append_assigned(
         enc_rd = meta["encode_round_digits"]
         codes = pq_encode(
             vecs,
-            codebooks if codebooks is not None
-            else _read_codebooks(spark, name, meta),
+            codebooks,
             id_col="cand_id",
             vec_col="vec",
             round_digits=None if enc_rd < 0 else enc_rd,
@@ -448,9 +520,15 @@ def ann_index_topk(
     Output matches the in-query operator of the same kind exactly:
     flat → ``(query_id, cand_id, cosine, rank)`` (ivf_topk's contract,
     self-matches excluded); pq → ``(query_id, vec_id, adist, rank)``
-    (ivfpq_topk's ADC contract, self-matches kept)."""
+    (ivfpq_topk's ADC contract, self-matches kept).
+
+    Spark jobs per call, its result collect included: meta, queries and
+    the lists scan (2 for pq, 4 for flat) on a warm call; the first call
+    of a generation in a process also collects the centroids and (pq)
+    the codebooks into the per-generation quantizer cache (see
+    _quantizer), so cold is pq 6 / flat 7 and warm pq 4 / flat 6."""
     _check_name(name)
-    cent_t, lists_t, _, _ = _tables(name)
+    lists_t = _tables(name)[1]
     meta = _read_meta(spark, name)
     digits = meta["round_digits"]
     g = int(meta["generation"])
@@ -461,26 +539,12 @@ def ann_index_topk(
     # the consistent OLD answer or the consistent NEW answer; empty
     # results, errors, and cross-generation mixes (neighbors ranked
     # under one generation's centroids against another's lists/
-    # codebooks) are unreachable by construction. The one bounded
-    # guard job below catches external corruption (a hand-deleted
-    # generation), not mid-commit states.
-    cent = _live(spark.table(cent_t), g).select("cent_id", "vec")
-    # The geometry guard is FUSED with the centroid collect the probe
-    # needs anyway: one job fetches the contractually-small centroid set,
-    # the guard reads count/dim from the collected rows, and the probe —
-    # picked on the driver from the query batch, collected once — uses
-    # the same rows. A call's jobs are: meta, centroids, codebooks (pq),
-    # queries, and the lists scan the caller's action runs.
-    cent_rows = cent.collect()
-    c_n = len(cent_rows)
-    c_d = max((len(r.vec) for r in cent_rows), default=None)
-    if c_n == 0 or c_d != meta["dim"]:
-        raise ValueError(
-            f"ANN index {name!r}: generation {g} centroids are "
-            f"inconsistent with meta ({c_n} rows, dim {c_d} vs "
-            f"meta dim {meta['dim']}) — the index is corrupt; rebuild "
-            f"with build_ann_index"
-        )
+    # codebooks) are unreachable by construction. The geometry guards of
+    # the quantizer fill catch external corruption (a hand-deleted
+    # generation), not mid-commit states. The probe is picked on the
+    # driver from the query batch, collected once, against the cached
+    # centroid rows: no centroid DataFrame is built on a warm call.
+    cent_rows, cent_type, codebooks = _quantizer(spark, name, meta)
     if meta["kind"] == "pq":
         from astro_sdk_spark.functions.pq import ivfpq_scan_lists
 
@@ -490,8 +554,8 @@ def ann_index_topk(
         return ivfpq_scan_lists(
             queries.select(id_col, vec_col),
             lists,
-            cent,
-            _read_codebooks(spark, name, meta),
+            None,
+            codebooks,
             nprobe=nprobe,
             k=k,
             id_col=id_col,
@@ -525,7 +589,7 @@ def ann_index_topk(
         T.StructType([
             T.StructField("query_id", queries.schema[id_col].dataType),
             T.StructField("_qvec", queries.schema[vec_col].dataType),
-            T.StructField("cent_id", cent.schema["cent_id"].dataType),
+            T.StructField("cent_id", cent_type),
         ]),
     )
     lists = _live(spark.table(lists_t), g).filter(
@@ -598,6 +662,7 @@ def drop_ann_index(spark: SparkSession, name: str) -> None:
     from astro_sdk_spark.engine import drop_managed_table
 
     _check_name(name)
+    _QUANTIZERS.pop(name, None)
     for t in _tables(name):
         drop_managed_table(spark, t)
 
@@ -882,7 +947,8 @@ def ann_index_retrain(
     # corpus was resolved ABOVE against the old generation, so a flat
     # index's self-read never sees its own new rows.
     _append_assigned(
-        spark, corpus, name, id_col, vec_col, dedupe=False, meta=new_meta
+        spark, corpus, name, id_col, vec_col, dedupe=False, meta=new_meta,
+        codebooks=codebooks,
     )
     step("lists")
     # 4. THE commit point: one appended meta row makes g_new the

@@ -405,7 +405,7 @@ def ivfpq_topk(
 def ivfpq_scan_lists(
     queries: DataFrame,
     lists: DataFrame,
-    centroids: DataFrame,
+    centroids: DataFrame | None,
     codebooks,
     nprobe: int = 4,
     k: int = 10,
@@ -427,7 +427,10 @@ def ivfpq_scan_lists(
     match an in-query assignment bit for bit); the lists scan is pruned
     to the union of probed cells BEFORE the Arrow boundary (a static
     partition filter when the lists table is partitioned by cell).
-    ``round_digits`` rounds ``adist`` only."""
+    ``round_digits`` rounds ``adist`` only. A caller already holding the
+    collected ``(cent_id, vec)`` rows passes them as ``_cents_rows`` and
+    ``centroids=None`` (ann_index_topk's quantizer cache); ``codebooks``
+    may be the ``(m, k, dsub)`` ndarray itself."""
     import numpy as np
     import pandas as pd
 

@@ -253,14 +253,35 @@ def nearest_centroids(
     device as PQ codebooks) and runs an Arrow-batched numpy matmul per
     partition: one BLAS call replaces |df|·k interpreted
     higher-order-function cosines (~100× on dim-64 data)."""
+    return _assign_nearest(
+        df,
+        centroids.select(cent_id_col, cent_vec_col).collect(),
+        dict(centroids.dtypes)[cent_id_col],
+        id_col=id_col,
+        vec_col=vec_col,
+        n=n,
+        round_digits=round_digits,
+    )
+
+
+def _assign_nearest(
+    df: DataFrame,
+    cent_rows,
+    cent_type: str,
+    id_col: str,
+    vec_col: str,
+    n: int,
+    round_digits: int,
+) -> DataFrame:
+    """:func:`nearest_centroids` against already-collected ``(cent_id,
+    vec)`` rows whose id column has the DDL type ``cent_type`` — for a
+    caller that holds the centroid set already (the persisted ANN
+    index's quantizer cache), so the assignment runs no collect job."""
     import pandas as pd
 
-    cent_ids, cmat = _centroid_matrix(
-        centroids.select(cent_id_col, cent_vec_col).collect()
-    )
+    cent_ids, cmat = _centroid_matrix(cent_rows)
     spark = df.sparkSession
     id_type = dict(df.dtypes)[id_col]
-    cent_type = dict(centroids.dtypes)[cent_id_col]
     out_schema = f"{id_col} {id_type}, cent_id {cent_type}"
     b_cids = spark.sparkContext.broadcast(cent_ids)
     b_cmat = spark.sparkContext.broadcast(cmat)

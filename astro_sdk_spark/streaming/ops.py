@@ -350,7 +350,12 @@ def stream_ann_index_ingest(
     restart the stream (or re-add those ids) for exact coverage.
     Without the knob, meta is read ONCE at wiring time and a retrain
     mid-stream leaves later batches invisible the same way — restart
-    the stream after retraining."""
+    the stream after retraining.
+
+    Each micro-batch takes the centroids and codebooks of its meta's
+    generation from the per-generation quantizer cache
+    (functions/ann_index.py:_quantizer): only the first batch or top-k
+    of a generation in the process collects them."""
     from astro_sdk_spark.functions.ann_index import (
         _append_assigned,
         _read_meta,

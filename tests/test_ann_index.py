@@ -337,38 +337,62 @@ def test_retrain_pq_requires_corpus_and_codebooks(spark, emb, idx):
                           corpus=emb)
 
 
+def _group_jobs(spark, group, fn):
+    """Run ``fn()`` under Spark job group ``group``; return its result
+    and the ids of the jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+# jobs of one warm micro-batch add (flat index, quantizer cached): the
+# dedupe anti-join, assignment and append write with their AQE sub-jobs
+_BATCH_JOBS_WARM = 4
+
+
 def test_stream_batch_path_job_count_is_bounded(spark, emb, idx):
     """The per-micro-batch path (what stream_ann_index_ingest runs via
     foreachBatch) must not accumulate per-batch fixed Spark actions: the
     meta row is read ONCE at wiring time and the geometry guard rides
     INSIDE the assignment job (see _append_assigned) — so one batch add
     is one logical action (anti-join + assign + append write, ≤5 jobs
-    counting AQE sub-jobs and the centroid-broadcast collect). A
-    regression that reintroduces a per-batch head()/meta job pushes the
-    count past the pin."""
+    counting AQE sub-jobs and the centroid collect). A regression that
+    reintroduces a per-batch head()/meta job pushes the count past the
+    pin. The second batch of a generation takes the quantizer from the
+    cache and runs no centroid collect."""
     from astro_sdk_spark.functions.ann_index import _append_assigned, _read_meta
 
     cents = emb.filter(F.col("vec_id") < 16)
-    build_ann_index(spark, emb.filter(F.col("vec_id") % 2 == 0), idx, cents)
+    build_ann_index(spark, emb.filter(F.col("vec_id") % 4 == 0), idx, cents)
     meta = _read_meta(spark, idx)
-    sc = spark.sparkContext
-    sc.setJobGroup("ann_batch_add", "job-count pin")
-    try:
-        _append_assigned(
-            spark, emb.filter(F.col("vec_id") % 2 == 1), idx,
+
+    def add(rem):
+        return lambda: _append_assigned(
+            spark, emb.filter(F.col("vec_id") % 4 == rem), idx,
             "vec_id", "embedding", meta=meta,
         )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("ann_batch_add")
-    assert 1 <= len(jobs) <= 6, f"per-batch job count crept up: {jobs}"
+
+    _, cold = _group_jobs(spark, "ann_batch_add", add(1))
+    assert 1 <= len(cold) <= 6, f"per-batch job count crept up: {cold}"
+    _, warm = _group_jobs(spark, "ann_batch_add_warm", add(2))
+    assert len(warm) <= _BATCH_JOBS_WARM, (
+        f"warm micro-batch ran {len(warm)} Spark jobs, budget "
+        f"{_BATCH_JOBS_WARM}: the quantizer was read again"
+    )
 
 
-# Spark jobs of one top-k call, its result collect included: meta read,
-# centroid collect, codebook collect (pq only), query collect, and the
-# lists scan — 2 jobs for the pq scan, 4 for the flat scan (the probe
-# relation's broadcast plus the AQE stages of the dedupe and rank).
-_TOPK_JOBS = {"pq": 6, "flat": 7}
+# Spark jobs of one top-k call, its result collect included. Cold (the
+# first call of a generation in a process): meta read, centroid collect,
+# codebook collect (pq only), query collect, and the lists scan — 2 jobs
+# for the pq scan, 4 for the flat scan (the probe relation's broadcast
+# plus the AQE stages of the dedupe and rank). Warm: the quantizer cache
+# serves the centroids and codebooks.
+_TOPK_JOBS_COLD = {"pq": 6, "flat": 7}
+_TOPK_JOBS_WARM = {"pq": 4, "flat": 6}
 
 
 @pytest.mark.parametrize("kind", ["pq", "flat"])
@@ -376,24 +400,96 @@ def test_topk_job_count_is_pinned(spark, emb, idx, kind):
     """A serving request pays a fixed number of driver-synchronous Spark
     jobs. The probe is picked on the driver from the one collect of the
     query batch; a regression that brings back a probe job, or collects
-    the queries twice, pushes the count past the pin."""
+    the queries twice, pushes the count past the pin. A second identical
+    call reads the quantizer from the cache."""
     kw = {"codebooks": _codebooks_from(emb)} if kind == "pq" else {}
     build_ann_index(spark, emb, idx, emb.filter(F.col("vec_id") < 16), **kw)
     queries = emb.filter(F.col("vec_id") < 8)
-    sc = spark.sparkContext
-    group = f"ann_topk_{kind}"
-    sc.setJobGroup(group, "job-count pin")
-    try:
-        rows = ann_index_topk(spark, queries, idx, nprobe=4, k=10).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert rows
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= _TOPK_JOBS[kind], (
-        f"{kind} ann_index_topk ran {len(jobs)} Spark jobs, budget "
-        f"{_TOPK_JOBS[kind]} (meta, centroids, codebooks, queries, scan): "
-        f"a per-request probe or collect job came back"
+
+    def call():
+        return ann_index_topk(spark, queries, idx, nprobe=4, k=10).collect()
+
+    for temp, budget in (("cold", _TOPK_JOBS_COLD), ("warm", _TOPK_JOBS_WARM)):
+        rows, jobs = _group_jobs(spark, f"ann_topk_{kind}_{temp}", call)
+        assert rows
+        assert len(jobs) <= budget[kind], (
+            f"{temp} {kind} ann_index_topk ran {len(jobs)} Spark jobs, "
+            f"budget {budget[kind]}: a per-request probe, quantizer or "
+            f"collect job came back"
+        )
+
+
+def _pq_rows(df):
+    return sorted(
+        map(tuple, df.select("query_id", "vec_id", "adist", "rank").collect())
     )
+
+
+def test_quantizer_cache_misses_on_rebuild_under_same_name(spark, emb, idx):
+    """A rebuild restarts at generation 0 under the same name. A process
+    that cached the old build's quantizer (restored here, as if another
+    process had dropped and rebuilt the index) must serve the NEW
+    centroids and codebooks, which a cache keyed on (name, generation)
+    would not."""
+    from astro_sdk_spark.functions.ann_index import _QUANTIZERS
+    from astro_sdk_spark.functions.pq import ivfpq_topk
+
+    q = emb.filter(F.col("vec_id") < 8)
+    old_cbs = _codebooks_from(emb)
+    build_ann_index(spark, emb, idx, emb.filter(F.col("vec_id") < 16),
+                    codebooks=old_cbs)
+    want_old = _pq_rows(ivfpq_topk(q, emb, centroids=emb.filter(
+        F.col("vec_id") < 16), codebooks=old_cbs, nprobe=4, k=10))
+    assert _pq_rows(ann_index_topk(spark, q, idx, nprobe=4, k=10)) == want_old
+    cached = dict(_QUANTIZERS)
+
+    cents = emb.filter(F.col("vec_id").between(16, 31))
+    cbs = [[list(reversed(cw)) for cw in sub] for sub in old_cbs]
+    build_ann_index(spark, emb, idx, cents, codebooks=cbs)
+    _QUANTIZERS.update(cached)
+    want = _pq_rows(
+        ivfpq_topk(q, emb, centroids=cents, codebooks=cbs, nprobe=4, k=10)
+    )
+    assert want != want_old
+    for _ in range(2):  # the refill, then a hit on it
+        got = _pq_rows(ann_index_topk(spark, q, idx, nprobe=4, k=10))
+        assert got == want, "stale quantizer served after a rebuild"
+
+
+def test_quantizer_cache_same_name_in_another_database(spark, emb, idx):
+    """The same index name in two databases answers from its own
+    quantizer, however the calls interleave."""
+    cur = spark.catalog.currentDatabase()
+    q = emb.filter(F.col("vec_id") < 8)
+    spark.sql("CREATE DATABASE IF NOT EXISTS ann_cache_db2")
+    try:
+        build_ann_index(spark, emb, idx, emb.filter(F.col("vec_id") < 16))
+        want_a = _rows(ivf_topk(q, emb, centroids=emb.filter(
+            F.col("vec_id") < 16), nprobe=4, k=10))
+        spark.sql("USE ann_cache_db2")
+        cents_b = emb.filter(F.col("vec_id").between(16, 31))
+        build_ann_index(spark, emb, idx, cents_b)
+        want_b = _rows(ivf_topk(q, emb, centroids=cents_b, nprobe=4, k=10))
+        assert want_a != want_b
+        for db, want in ((cur, want_a), ("ann_cache_db2", want_b)) * 2:
+            spark.sql(f"USE {db}")
+            got = _rows(ann_index_topk(spark, q, idx, nprobe=4, k=10))
+            assert got == want, f"{db} answered from the other quantizer"
+    finally:
+        spark.sql("USE ann_cache_db2")
+        drop_ann_index(spark, idx)
+        spark.sql(f"USE {cur}")
+        spark.sql("DROP DATABASE IF EXISTS ann_cache_db2 CASCADE")
+
+
+def test_drop_evicts_quantizer_cache_entry(spark, emb, idx):
+    from astro_sdk_spark.functions.ann_index import _QUANTIZERS
+
+    build_ann_index(spark, emb, idx, emb.filter(F.col("vec_id") < 16))
+    ann_index_topk(spark, emb.filter(F.col("vec_id") < 8), idx).collect()
+    assert idx in _QUANTIZERS
+    drop_ann_index(spark, idx)
+    assert idx not in _QUANTIZERS
 
 
 def test_flat_topk_empty_queries_answers_nothing(spark, emb, idx):

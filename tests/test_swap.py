@@ -48,6 +48,32 @@ def test_swap_restores_target_when_rename_fails(spark, monkeypatch):
     spark.sql("DROP TABLE IF EXISTS swap_tgt3")
 
 
+def test_swap_restore_keeps_staging_partitioning(spark, monkeypatch):
+    """A failed RENAME writes a partitioned staging table back as a
+    target partitioned by the same columns (merge_scd2's partition_by)."""
+    _mk(spark, "swap_tgt4", [(1, "old")])
+    staged = spark.createDataFrame(
+        [(k, f"v{k}", k % 3) for k in range(6)], "k int, v string, p int"
+    )
+    staged.write.partitionBy("p").saveAsTable("swap_tgt4__staging")
+    real_sql = spark.sql
+
+    def failing_sql(query, *a, **k):
+        if "RENAME TO" in query:
+            raise RuntimeError("injected rename failure")
+        return real_sql(query, *a, **k)
+
+    monkeypatch.setattr(spark, "sql", failing_sql)
+    swap_table(spark, "swap_tgt4")
+    monkeypatch.undo()
+    got = spark.table("swap_tgt4")
+    assert sorted(got.select("k", "v", "p").collect()) == sorted(staged.collect())
+    assert [c.name for c in spark.catalog.listColumns("swap_tgt4")
+            if c.isPartition] == ["p"]
+    assert not spark.catalog.tableExists("swap_tgt4__staging")
+    spark.sql("DROP TABLE IF EXISTS swap_tgt4")
+
+
 def test_merge_update_schema_qualified_target(engine, spark):
     """Regression: staging used to land in the default DB while the target
     was schema-qualified — the cross-db RENAME destroyed the target."""
