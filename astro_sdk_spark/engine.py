@@ -159,6 +159,27 @@ def refuse_orphaned_location(spark: SparkSession, qualified_name: str) -> None:
         )
 
 
+def partition_columns(spark: SparkSession, qualified_name: str) -> list[str]:
+    """The partition columns of a table, in partition-spec order.
+
+    Read from the ``# Partition Information`` rows of ``DESCRIBE TABLE``,
+    a catalog command that runs no Spark job (``catalog.listColumns``
+    runs two on a partitioned table and one on an unpartitioned one)."""
+    rows = spark.sql(
+        f"DESCRIBE TABLE {quote_identifier(qualified_name)}"
+    ).collect()
+    names = [r.col_name for r in rows]
+    if "# Partition Information" not in names:
+        return []
+    # the section header is followed by a "# col_name" header row
+    out = []
+    for n in names[names.index("# Partition Information") + 2:]:
+        if not n or n.startswith("#"):
+            break
+        out.append(n)
+    return out
+
+
 # ------------------------------------------------------- staged rewrites
 # Every writer that replaces a whole table (merge 'update', merge_scd2,
 # compact_table, publish_table, the rollup refresh and the sketch store)
@@ -222,9 +243,8 @@ def swap_table(spark: SparkSession, target: str) -> None:
         # holds the full post-swap contents — restore by writing it back
         if spark.catalog.tableExists(target) or not spark.catalog.tableExists(staging):
             raise
-        # keep the staging's partitioning (listColumns runs Spark jobs,
-        # so it is asked only on this failure path)
-        parts = [c.name for c in spark.catalog.listColumns(staging) if c.isPartition]
+        # keep the staging's partitioning
+        parts = partition_columns(spark, staging)
         (
             spark.table(staging).write.mode("overwrite").format("parquet")
             .partitionBy(*parts).saveAsTable(target)
@@ -679,9 +699,7 @@ class SparkEngine:
         (scoped to the selected partition when ``partitions`` is given).
         """
         qname = table.qualified_name
-        part_cols = [
-            c.name for c in self.spark.catalog.listColumns(qname) if c.isPartition
-        ]
+        part_cols = partition_columns(self.spark, qname)
         if part_cols and partitions is None:
             raise ValueError(
                 f"compact_table: {qname} is partitioned by {part_cols}; pass "

@@ -41,13 +41,18 @@ the consistent new answer — never empty, never an error, never a
 cross-generation mix, because all three scans derive their generation
 from the same single meta row.
 
-Quantizer cache (_quantizer): centroid and codebook rows of a generation
-are append-only and never rewritten, so each process keeps the live
-quantizer of every index it served, keyed on the winning meta row's FILE
-and generation. A warm request or micro-batch reads only the meta row
-for the centroids and codebooks; a retrain (new meta row), a rebuild, a
+Caches (_read_meta, _quantizer): each process keeps, per index name,
+the live meta row and the quantizer (centroid rows, PQ codebooks) of its
+generation, keyed on the meta table's file listing. Parquet files are
+immutable and every build, retrain go-live or rebuild adds or replaces a
+meta file, so the key changes exactly when the row can; a rebuild, a
 rewritten meta table or the same name in another database or warehouse
-changes that key and refills.
+changes it too. Centroid and codebook rows of a generation are
+append-only and never rewritten. The listing comes from the session's
+file index with no Spark job, so a warm request or micro-batch reads no
+meta, centroid or codebook rows, and sees a meta file another session
+added exactly when a plain read of the table would (after a
+``refreshTable``). drop_ann_index evicts the entry.
 
 Determinism contract: assignment/probing/rescoring round before every
 rank and break ties on ascending id — identical to ivf_topk / ivfpq_topk,
@@ -64,7 +69,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from astro_sdk_spark.functions.similarity import (
-    _assign_nearest,
+    _ivf_lists,
     _nearest_centroid_ids,
     cosine_similarity_col,
 )
@@ -88,9 +93,10 @@ _ROUND_DIGITS = 4
 # DROP statement, and a crafted name could point the scrub elsewhere)
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
-# index name -> ((meta file, generation), (centroid rows, cent_id type,
-# codebooks)): at most one live quantizer per name, see _quantizer
-_QUANTIZERS: dict = {}
+# index name -> (meta files, meta row, (centroid rows, cent_id type,
+# codebooks) or None): at most one entry per name, see _read_meta and
+# _quantizer
+_INDEXES: dict = {}
 
 
 def _check_name(name: str) -> None:
@@ -120,23 +126,30 @@ def _read_meta(spark: SparkSession, name: str) -> dict:
     new max, never a half-committed state. Pre-generation indexes
     (written before the gen columns existed) read as generation 0.
 
-    ``_file`` is the parquet file the winning row was read from (same
-    job): with the generation, it is the quantizer cache's identity."""
+    Served from the per-process cache while the meta table's sorted
+    file listing (``inputFiles()``: the session's file index, no Spark
+    job) is the one the row was read under; ``_files`` carries that
+    listing, the identity _quantizer keys on. The returned dict is
+    shared with the cache: read it, do not mutate it."""
     meta_t = _tables(name)[2]
     if not spark.catalog.tableExists(meta_t):
         raise ValueError(f"ANN index {name!r} does not exist (no {meta_t})")
     t = spark.table(meta_t)
-    cols = t.columns
-    t = t.select("*", F.col("_metadata.file_path").alias("_file"))
+    files = tuple(sorted(t.inputFiles()))
+    hit = _INDEXES.get(name)
+    if hit is not None and hit[0] == files:
+        return hit[1]
     row = (
         t.orderBy(F.desc("generation")).head()
-        if "generation" in cols
+        if "generation" in t.columns
         else t.head()
     )
     if row is None:
         raise ValueError(f"ANN index {name!r} has an empty meta table")
     meta = row.asDict()
     meta.setdefault("generation", 0)
+    meta["_files"] = files
+    _INDEXES[name] = (files, meta, None)
     return meta
 
 
@@ -175,33 +188,35 @@ def _quantizer(spark: SparkSession, name: str, meta: dict):
     ``meta`` names; ``codebooks`` is an ``(m, k, dsub)`` ndarray for a PQ
     index, else None.
 
-    Served from a per-process cache keyed on ``(meta["_file"],
-    generation)``. Within a generation, centroid and codebook rows are
-    append-only and never rewritten (compaction touches only the lists),
-    so an entry cannot go stale while its meta row is live. Output file
-    names carry the writing job's UUID, so a drop and rebuild under the
-    same name (which restarts at generation 0), a rewritten meta table,
-    and the same name in another database or warehouse all change the
-    key; a retrain changes the generation. Both scans bind to ``meta``'s
-    generation, the same row that binds the lists scan, so no
-    cross-generation mix is constructible.
+    Served from the per-process cache entry of ``meta["_files"]``, the
+    meta table's file listing ``meta`` was read under (see _read_meta).
+    Within a generation, centroid and codebook rows are append-only and
+    never rewritten (compaction touches only the lists), so an entry
+    cannot go stale while its meta row is live. Output file names carry
+    the writing job's UUID, so a drop and rebuild under the same name
+    (which restarts at generation 0), a rewritten meta table, the same
+    name in another database or warehouse, and a retrain's new meta row
+    all change the key. Both scans bind to ``meta``'s generation, the
+    same row that binds the lists scan, so no cross-generation mix is
+    constructible.
 
     The geometry guards run on every fill, before anything is stored:
     a corrupt generation fails on its first read in a process. Rows
     deleted by hand AFTER a fill are not re-detected. At most one entry
     per index name, replaced whole by one dict assignment (safe from a
     stream's foreachBatch thread); drop_ann_index evicts it. A ``meta``
-    without ``_file`` (not read back from the table) is never stored."""
-    key = (meta.get("_file"), int(meta["generation"]))
-    hit = _QUANTIZERS.get(name)
-    if hit is not None and hit[0] == key:
-        return hit[1]
+    without ``_files`` (not read back from the table) is never stored."""
+    files = meta.get("_files")
+    hit = _INDEXES.get(name)
+    if hit is not None and hit[0] == files and hit[2] is not None:
+        return hit[2]
+    gen = int(meta["generation"])
     cent_rows, cent_type = _read_centroids(spark, name, meta)
     codebooks = None
     if meta["kind"] == "pq":
         import numpy as np
 
-        rows = _live(spark.table(_tables(name)[3]), key[1]).collect()
+        rows = _live(spark.table(_tables(name)[3]), gen).collect()
         m, k = meta["pq_m"], meta["pq_k"]
         if len(rows) == m * k:
             codebooks = np.full((m, k, len(rows[0].vec)), np.nan)
@@ -210,14 +225,14 @@ def _quantizer(spark: SparkSession, name: str, meta: dict):
         if len(rows) != m * k or np.isnan(codebooks).any():
             raise ValueError(
                 f"ANN index {name!r}: codebook table holds {len(rows)} "
-                f"rows for generation {key[1]}, expected m×k = {m}×{k} "
+                f"rows for generation {gen}, expected m×k = {m}×{k} "
                 f"distinct (s, j) cells — the index is corrupt (a retrain "
                 f"that crashed mid-append never commits a meta row, so "
                 f"this should be unreachable; rebuild with build_ann_index)"
             )
     entry = (cent_rows, cent_type, codebooks)
-    if key[0] is not None:
-        _QUANTIZERS[name] = (key, entry)
+    if files is not None:
+        _INDEXES[name] = (files, meta, entry)
     return entry
 
 
@@ -311,14 +326,16 @@ def build_ann_index(
     ``centroids`` is caller-supplied — train_centroids output, a coreset,
     or a deterministic sample — keeping the quantizer choice outside the
     storage layer (same contract as ivf_topk). One broadcast-assign pass
-    over the corpus, no shuffle; the lists table write is the only one
-    that scales with the corpus.
+    over the corpus, no shuffle: each vector's list and payload come out
+    of the same Arrow batch; the lists table write is the only one that
+    scales with the corpus.
 
     With ``codebooks`` (``[m][k][dsub]``, e.g. from train_pq), the lists
     store PQ CODES instead of raw vectors — the IVFADC layout — and
-    queries answer through the ADC scan (ivfpq_topk's contract).
-    ``encode_round_digits`` is forwarded to pq_encode; set it when the
-    codebooks were trained (see the determinism note there)."""
+    queries answer through the ADC scan (ivfpq_topk's contract). The
+    codes are pq_encode's (same kernel), with ``encode_round_digits`` as
+    its ``round_digits``; set it when the codebooks were trained (see
+    the determinism note there)."""
     _check_name(name)
     cent_t, lists_t, meta_t, cb_t = _tables(name)
     drop_ann_index(spark, name)
@@ -385,13 +402,18 @@ def ann_index_add(
 ) -> None:
     """Incrementally index new vectors: assign (and for a PQ index,
     encode) against the STORED centroids/codebooks — the corpus lists are
-    never rescanned. With ``dedupe`` (default), ids already in the index
-    are skipped, making re-adds idempotent — the anti-join touches only
-    the lists table's id column (column-pruned scan).
+    never rescanned. With ``dedupe`` (default), ids already in the live
+    generation are skipped whatever their vector, making re-adds
+    idempotent — the dedupe reads only the lists table's id column
+    (column-pruned scan), against the batch's ids broadcast when the
+    planner sees a small batch.
 
-    The stored quantizer comes from the per-generation cache (see
-    _quantizer): after the first add or top-k of a generation in this
-    process, an add reads no centroid or codebook rows."""
+    The meta row and the stored quantizer come from the per-process cache
+    (see _read_meta, _quantizer): after the first add or top-k of a
+    generation in this process, an add reads no meta, centroid or
+    codebook rows and runs 4 Spark jobs (the batch-id broadcast, the
+    lists id scan, the batch side of the anti-join, and the write of the
+    one assign+encode pass)."""
     _check_name(name)
     meta = _read_meta(spark, name)  # existence + geometry check
     _append_assigned(spark, batch, name, id_col, vec_col, dedupe=dedupe, meta=meta)
@@ -437,57 +459,53 @@ def _append_assigned(
     )
     gen = int(meta["generation"])
     lists_exists = spark.catalog.tableExists(lists_t)
+    lists = spark.table(lists_t) if lists_exists else None
     # legacy (pre-generation) layout has no gen column anywhere; its
     # rows are implicitly generation 0 and appends must not introduce
     # the column mid-table (schema mismatch) — _live handles the reads
-    legacy = lists_exists and "gen" not in spark.table(lists_t).columns
+    legacy = lists_exists and "gen" not in lists.columns
     if not first and dedupe and lists_exists:
         # dedupe against the CURRENT generation only: rows a stale
         # stream appended under a pre-retrain generation are invisible
         # to queries (see ann_index_topk) and must not block the same
-        # ids from being re-added under the live quantizer
-        vecs = vecs.join(
-            _live(spark.table(lists_t), gen).select("cand_id"),
-            "cand_id",
-            "left_anti",
+        # ids from being re-added under the live quantizer. The ids of
+        # the batch already in the lists come from a semi-join whose
+        # build side is the (small) batch, so size-based planning
+        # broadcasts the batch and scans the lists' id column map-side
+        # instead of shuffling it; only those few ids meet the batch
+        # again in the anti-join. No hint: a large batch keeps a
+        # sort-merge plan.
+        batch_ids = df.select(F.col(id_col).alias("cand_id"))
+        present = (
+            _live(lists, gen)
+            .select("cand_id")
+            .join(batch_ids, "cand_id", "left_semi")
         )
+        vecs = vecs.join(present, "cand_id", "left_anti")
     # the quantizer is bound to the caller's meta generation: during a
     # retrain the centroid table legitimately holds two generations, and
     # a stale writer must keep assigning against the quantizer its meta
     # row describes (those rows stay self-consistent and invisible), not
-    # against a mixed set
-    assigned = _assign_nearest(
+    # against a mixed set. Assignment and payload (PQ code or vector)
+    # come out of ONE Arrow pass.
+    enc_rd = meta["encode_round_digits"]
+    out = _ivf_lists(
         vecs,
         cent_rows,
         cent_type.simpleString(),
         id_col="cand_id",
         vec_col="vec",
-        n=1,
         round_digits=meta["round_digits"],
+        codebooks=codebooks if meta["kind"] == "pq" else None,
+        encode_round_digits=None if enc_rd < 0 else enc_rd,
     )
-    if meta["kind"] == "pq":
-        from astro_sdk_spark.functions.pq import pq_encode
-
-        enc_rd = meta["encode_round_digits"]
-        codes = pq_encode(
-            vecs,
-            codebooks,
-            id_col="cand_id",
-            vec_col="vec",
-            round_digits=None if enc_rd < 0 else enc_rd,
-        )
-        payload = ["cand_id", "pq_code"]
-        out = codes.join(assigned, "cand_id")
-    else:
-        payload = ["cand_id", "vec"]
-        out = vecs.join(assigned, "cand_id")
-    cols = ["cent_id", *payload] + ([] if legacy else [F.lit(gen).alias("gen")])
-    out = out.select(*cols)
+    if not legacy:
+        out = out.withColumn("gen", F.lit(gen))
     # directory-per-centroid layout: probing nprobe lists then reads
     # exactly nprobe/n_centroids of the table's FILES (static pruning)
     writer = out.write.format("parquet").partitionBy("cent_id")
     try:
-        if first and not spark.catalog.tableExists(lists_t):
+        if first and not lists_exists:
             writer.saveAsTable(lists_t)
         else:
             writer.mode("append").saveAsTable(lists_t)
@@ -522,11 +540,12 @@ def ann_index_topk(
     self-matches excluded); pq → ``(query_id, vec_id, adist, rank)``
     (ivfpq_topk's ADC contract, self-matches kept).
 
-    Spark jobs per call, its result collect included: meta, queries and
-    the lists scan (2 for pq, 4 for flat) on a warm call; the first call
-    of a generation in a process also collects the centroids and (pq)
-    the codebooks into the per-generation quantizer cache (see
-    _quantizer), so cold is pq 6 / flat 7 and warm pq 4 / flat 6."""
+    Spark jobs per call, its result collect included: queries and the
+    lists scan (2 for pq, 4 for flat) on a warm call; the first call of
+    a generation in a process also reads the meta row and collects the
+    centroids and (pq) the codebooks into the per-process cache (see
+    _read_meta, _quantizer), so cold is pq 6 / flat 7 and warm pq 3 /
+    flat 5."""
     _check_name(name)
     lists_t = _tables(name)[1]
     meta = _read_meta(spark, name)
@@ -662,7 +681,7 @@ def drop_ann_index(spark: SparkSession, name: str) -> None:
     from astro_sdk_spark.engine import drop_managed_table
 
     _check_name(name)
-    _QUANTIZERS.pop(name, None)
+    _INDEXES.pop(name, None)
     for t in _tables(name):
         drop_managed_table(spark, t)
 

@@ -209,6 +209,29 @@ def train_pq(
     return [[list(map(float, cw)) for cw in sub] for sub in cb]
 
 
+def _pq_codes(vecs, cb, round_digits: int | None) -> list:
+    """PQ codes of a non-empty batch of vectors against the ``(m, k,
+    dsub)`` float64 codebook array ``cb``: one ``list[int]`` of ``m``
+    codeword indices per vector. The one encode kernel: :func:`pq_encode`
+    and the fused list pass (similarity.py:_ivf_lists) both call it, so
+    an index's stored codes are bit-identical to ``pq_encode``'s."""
+    import numpy as np
+
+    m, _, dsub = cb.shape
+    mat = _as_matrix(vecs)
+    xs = mat.reshape(len(mat), m, dsub)
+    cb_sq = (cb ** 2).sum(axis=2)
+    codes = np.empty((len(mat), m), dtype=np.int64)
+    for s in range(m):
+        d2 = cb_sq[s] - 2.0 * (xs[:, s, :] @ cb[s].T)
+        if round_digits is not None:
+            d2 = np.round(
+                d2 + (xs[:, s, :] ** 2).sum(axis=1)[:, None], round_digits
+            )
+        codes[:, s] = d2.argmin(axis=1)
+    return [c.tolist() for c in codes]
+
+
 def pq_encode(
     df: DataFrame,
     codebooks,
@@ -231,7 +254,7 @@ def pq_encode(
     import numpy as np
     import pandas as pd
 
-    m, k, dsub = _check_codebooks(codebooks)
+    _check_codebooks(codebooks)
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(
         np.asarray(codebooks, dtype=np.float64)
@@ -240,22 +263,11 @@ def pq_encode(
 
     def _encode(batches):
         cbl = bc.value
-        cb_sq = (cbl ** 2).sum(axis=2)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = _as_matrix(pdf["_v"])
-            xs = mat.reshape(len(mat), m, dsub)
-            codes = np.empty((len(mat), m), dtype=np.int64)
-            for s in range(m):
-                d2 = cb_sq[s] - 2.0 * (xs[:, s, :] @ cbl[s].T)
-                if rd is not None:
-                    d2 = np.round(
-                        d2 + (xs[:, s, :] ** 2).sum(axis=1)[:, None], rd
-                    )
-                codes[:, s] = d2.argmin(axis=1)
             yield pd.DataFrame(
-                {"_id": pdf["_id"].values, "_code": [c.tolist() for c in codes]}
+                {"_id": pdf["_id"].values, "_code": _pq_codes(pdf["_v"], cbl, rd)}
             )
 
     id_type = dict(df.dtypes)[id_col]
@@ -378,27 +390,25 @@ def ivfpq_topk(
 
     Returns ``(query_id, vec_id, adist, rank)`` — same contract as
     :func:`pq_topk` (self-matches kept; ADC distance of a vector to its
-    own code is nonzero by construction). ``encode_round_digits`` is
-    forwarded to :func:`pq_encode` — set it when ``codebooks`` came from
-    :func:`train_pq` (see the encode determinism note there)."""
-    import numpy as np
-    import pandas as pd
+    own code is nonzero by construction). The lists come from ONE Arrow
+    pass that assigns and encodes each candidate (pq_encode's kernel, so
+    the codes are pq_encode's); ``encode_round_digits`` is its
+    ``round_digits`` — set it when ``codebooks`` came from
+    :func:`train_pq` (see the encode determinism note on pq_encode)."""
+    from astro_sdk_spark.functions.similarity import _ivf_lists
 
-    from astro_sdk_spark.functions.similarity import nearest_centroids
-
-    codes = pq_encode(
-        candidates, codebooks, id_col=id_col, vec_col=vec_col,
-        round_digits=encode_round_digits,
+    # one centroid collect serves the list pass and the query probe
+    cents = centroids.select(id_col, vec_col)
+    cent_rows = cents.collect()
+    lists = _ivf_lists(
+        candidates, cent_rows, dict(cents.dtypes)[id_col], id_col, vec_col,
+        round_digits=4, codebooks=codebooks,
+        encode_round_digits=encode_round_digits,
     )
-    assigned = nearest_centroids(
-        candidates, centroids, id_col=id_col, vec_col=vec_col, n=1,
-        cent_id_col=id_col, cent_vec_col=vec_col,
-    )
-    lists = codes.join(assigned, on=id_col)
     return ivfpq_scan_lists(
-        queries, lists, centroids, codebooks, nprobe=nprobe, k=k,
+        queries, lists, None, codebooks, nprobe=nprobe, k=k,
         id_col=id_col, vec_col=vec_col, round_digits=round_digits,
-        cent_id_col=id_col, cent_vec_col=vec_col,
+        _cents_rows=cent_rows,
     )
 
 

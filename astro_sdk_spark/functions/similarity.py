@@ -206,10 +206,11 @@ def _centroid_matrix(rows):
 def _nearest_rows(vecs, cmat, n: int, round_digits: int):
     """Row positions in ``cmat`` of each vector's ``n`` nearest centroids.
 
-    The one assignment kernel: the executor side of
-    :func:`nearest_centroids` and the driver-side probe of
-    :func:`_nearest_centroid_ids` both call it, so a probe picked on the
-    driver is bit-identical to the same vector's executor assignment.
+    The one assignment kernel: the executor sides of
+    :func:`nearest_centroids` and :func:`_ivf_lists` and the driver-side
+    probe of :func:`_nearest_centroid_ids` all call it, so a probe picked
+    on the driver is bit-identical to the same vector's executor
+    assignment.
     ``vecs`` must be non-empty."""
     import numpy as np
 
@@ -253,33 +254,12 @@ def nearest_centroids(
     device as PQ codebooks) and runs an Arrow-batched numpy matmul per
     partition: one BLAS call replaces |df|·k interpreted
     higher-order-function cosines (~100× on dim-64 data)."""
-    return _assign_nearest(
-        df,
-        centroids.select(cent_id_col, cent_vec_col).collect(),
-        dict(centroids.dtypes)[cent_id_col],
-        id_col=id_col,
-        vec_col=vec_col,
-        n=n,
-        round_digits=round_digits,
-    )
-
-
-def _assign_nearest(
-    df: DataFrame,
-    cent_rows,
-    cent_type: str,
-    id_col: str,
-    vec_col: str,
-    n: int,
-    round_digits: int,
-) -> DataFrame:
-    """:func:`nearest_centroids` against already-collected ``(cent_id,
-    vec)`` rows whose id column has the DDL type ``cent_type`` — for a
-    caller that holds the centroid set already (the persisted ANN
-    index's quantizer cache), so the assignment runs no collect job."""
     import pandas as pd
 
-    cent_ids, cmat = _centroid_matrix(cent_rows)
+    cent_ids, cmat = _centroid_matrix(
+        centroids.select(cent_id_col, cent_vec_col).collect()
+    )
+    cent_type = dict(centroids.dtypes)[cent_id_col]
     spark = df.sparkSession
     id_type = dict(df.dtypes)[id_col]
     out_schema = f"{id_col} {id_type}, cent_id {cent_type}"
@@ -298,6 +278,62 @@ def _assign_nearest(
             yield pd.DataFrame({id_col: ids, "cent_id": cid[order].ravel()})
 
     return df.select(id_col, vec_col).mapInPandas(_assign, out_schema)
+
+
+def _ivf_lists(
+    df: DataFrame,
+    cent_rows,
+    cent_type: str,
+    id_col: str,
+    vec_col: str,
+    round_digits: int,
+    codebooks=None,
+    encode_round_digits: int | None = None,
+) -> DataFrame:
+    """Inverted-list rows of ``df`` in ONE Arrow pass: ``(cent_id,
+    id_col, vec_col)`` for a flat index, or ``(cent_id, id_col,
+    pq_code)`` when ``codebooks`` (``[m][k][dsub]``) are given.
+
+    Each vector's nearest centroid (:func:`_nearest_rows`, n=1) and its
+    payload come out of the same batch, so no self-join on the id puts
+    them back together (a duplicated id stays one row per input row).
+    Codes come from pq.py's ``_pq_codes``, the kernel ``pq_encode``
+    runs, with ``encode_round_digits`` as its ``round_digits``."""
+    import numpy as np
+    import pandas as pd
+
+    from astro_sdk_spark.functions.pq import _check_codebooks, _pq_codes
+
+    cent_ids, cmat = _centroid_matrix(cent_rows)
+    types = dict(df.dtypes)
+    if codebooks is None:
+        cb, out_col, out_type = None, vec_col, types[vec_col]
+    else:
+        _check_codebooks(codebooks)
+        cb = np.asarray(codebooks, dtype=np.float64)
+        out_col, out_type = "pq_code", "array<int>"
+    b = df.sparkSession.sparkContext.broadcast((cent_ids, cmat, cb))
+    erd = encode_round_digits
+
+    def _lists(batches):
+        cid, cm, cbl = b.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            vecs = pdf[vec_col]
+            out = pd.DataFrame({
+                "cent_id": cid[_nearest_rows(vecs, cm, 1, round_digits)[:, 0]],
+                id_col: pdf[id_col].to_numpy(),
+            })
+            out[out_col] = (
+                vecs.to_numpy() if cbl is None else _pq_codes(vecs, cbl, erd)
+            )
+            yield out
+
+    return df.select(id_col, vec_col).mapInPandas(
+        _lists,
+        f"cent_id {cent_type}, {id_col} {types[id_col]}, {out_col} {out_type}",
+    )
 
 
 def ivf_topk(

@@ -352,10 +352,15 @@ def stream_ann_index_ingest(
     mid-stream leaves later batches invisible the same way — restart
     the stream after retraining.
 
-    Each micro-batch takes the centroids and codebooks of its meta's
-    generation from the per-generation quantizer cache
-    (functions/ann_index.py:_quantizer): only the first batch or top-k
-    of a generation in the process collects them."""
+    Wiring reads meta through the per-process meta cache
+    (functions/ann_index.py:_read_meta), so a warm wiring runs no Spark
+    job, and each micro-batch takes the centroids and codebooks of its
+    meta's generation from the same cache (_quantizer): only the first
+    batch or top-k of a generation in the process collects them. A warm
+    micro-batch runs 4 jobs: the dedupe's batch-id broadcast and lists
+    id scan, the batch side of its anti-join, and the write of the one
+    assign+encode pass. They run on the stream's thread under the
+    query's ``runId`` job group."""
     from astro_sdk_spark.functions.ann_index import (
         _append_assigned,
         _read_meta,
@@ -365,7 +370,7 @@ def stream_ann_index_ingest(
     spark = stream.sparkSession
     # read meta ONCE at wiring time (fail here, not mid-stream) and close
     # over it: per micro-batch the only Spark work is the dedupe
-    # anti-join + assign + append — no meta re-read, no separate
+    # + assign/encode + append — no meta re-read, no separate
     # dim-check action (the geometry guard rides inside the assignment
     # job, see _append_assigned). The maintenance tick below is the
     # scheduled exception.

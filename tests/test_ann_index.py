@@ -349,9 +349,11 @@ def _group_jobs(spark, group, fn):
     return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
-# jobs of one warm micro-batch add (flat index, quantizer cached): the
-# dedupe anti-join, assignment and append write with their AQE sub-jobs
+# jobs of one warm micro-batch add (quantizer cached): the batch-id
+# broadcast of the dedupe semi-join, the lists id scan, the batch side of
+# the anti-join and the append write of the one assign+encode pass
 _BATCH_JOBS_WARM = 4
+_BATCH_JOBS_WARM_PQ = 4
 
 
 def test_stream_batch_path_job_count_is_bounded(spark, emb, idx):
@@ -389,10 +391,11 @@ def test_stream_batch_path_job_count_is_bounded(spark, emb, idx):
 # first call of a generation in a process): meta read, centroid collect,
 # codebook collect (pq only), query collect, and the lists scan — 2 jobs
 # for the pq scan, 4 for the flat scan (the probe relation's broadcast
-# plus the AQE stages of the dedupe and rank). Warm: the quantizer cache
-# serves the centroids and codebooks.
+# plus the AQE stages of the dedupe and rank). Warm: the meta cache
+# serves the meta row and the quantizer cache the centroids and
+# codebooks, so only the query collect and the scan remain.
 _TOPK_JOBS_COLD = {"pq": 6, "flat": 7}
-_TOPK_JOBS_WARM = {"pq": 4, "flat": 6}
+_TOPK_JOBS_WARM = {"pq": 3, "flat": 5}
 
 
 @pytest.mark.parametrize("kind", ["pq", "flat"])
@@ -426,12 +429,14 @@ def _pq_rows(df):
 
 
 def test_quantizer_cache_misses_on_rebuild_under_same_name(spark, emb, idx):
-    """A rebuild restarts at generation 0 under the same name. A process
-    that cached the old build's quantizer (restored here, as if another
+    """A rebuild restarts at generation 0 under the same name, with a
+    meta row equal to the old one field for field. A process that cached
+    the old build's meta row and quantizer (restored here, as if another
     process had dropped and rebuilt the index) must serve the NEW
     centroids and codebooks, which a cache keyed on (name, generation)
-    would not."""
-    from astro_sdk_spark.functions.ann_index import _QUANTIZERS
+    or on the meta row's values would not: the rebuild's meta file is a
+    new file, so the meta table's listing misses."""
+    from astro_sdk_spark.functions.ann_index import _INDEXES, _read_meta
     from astro_sdk_spark.functions.pq import ivfpq_topk
 
     q = emb.filter(F.col("vec_id") < 8)
@@ -441,12 +446,17 @@ def test_quantizer_cache_misses_on_rebuild_under_same_name(spark, emb, idx):
     want_old = _pq_rows(ivfpq_topk(q, emb, centroids=emb.filter(
         F.col("vec_id") < 16), codebooks=old_cbs, nprobe=4, k=10))
     assert _pq_rows(ann_index_topk(spark, q, idx, nprobe=4, k=10)) == want_old
-    cached = dict(_QUANTIZERS)
+    cached = dict(_INDEXES)
+    assert cached[idx][2] is not None  # meta row and quantizer both cached
 
     cents = emb.filter(F.col("vec_id").between(16, 31))
     cbs = [[list(reversed(cw)) for cw in sub] for sub in old_cbs]
     build_ann_index(spark, emb, idx, cents, codebooks=cbs)
-    _QUANTIZERS.update(cached)
+    _INDEXES.update(cached)
+    meta = _read_meta(spark, idx)
+    assert meta["_files"] != cached[idx][0], "rebuild hit the old meta entry"
+    old_meta = {k: v for k, v in cached[idx][1].items() if k != "_files"}
+    assert {k: v for k, v in meta.items() if k != "_files"} == old_meta
     want = _pq_rows(
         ivfpq_topk(q, emb, centroids=cents, codebooks=cbs, nprobe=4, k=10)
     )
@@ -483,13 +493,13 @@ def test_quantizer_cache_same_name_in_another_database(spark, emb, idx):
 
 
 def test_drop_evicts_quantizer_cache_entry(spark, emb, idx):
-    from astro_sdk_spark.functions.ann_index import _QUANTIZERS
+    from astro_sdk_spark.functions.ann_index import _INDEXES
 
     build_ann_index(spark, emb, idx, emb.filter(F.col("vec_id") < 16))
     ann_index_topk(spark, emb.filter(F.col("vec_id") < 8), idx).collect()
-    assert idx in _QUANTIZERS
+    assert idx in _INDEXES and _INDEXES[idx][2] is not None
     drop_ann_index(spark, idx)
-    assert idx not in _QUANTIZERS
+    assert idx not in _INDEXES
 
 
 def test_flat_topk_empty_queries_answers_nothing(spark, emb, idx):
@@ -729,3 +739,179 @@ def test_compact_purges_stale_generations(spark, emb, idx):
                        nprobe=4, k=10)
     )
     assert answers_after == answers_before
+
+
+def _stages_scanning(spark, jobs, table):
+    """Status-store ``StageData`` of every stage of ``jobs`` that scans
+    the managed table ``table`` (named in the stage's RDD scope)."""
+    import re
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    graph = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    scan = re.compile(r'label="Scan parquet [^"]*\.' + re.escape(table) + '"')
+    out = []
+    for j in jobs:
+        for sid in sc.statusTracker().getJobInfo(j).stageIds:
+            if scan.search(graph.makeDotFile(store.operationGraphForStage(sid))):
+                out.append(store.lastStageAttempt(sid))
+    return out
+
+
+@pytest.mark.parametrize(
+    "kind,encode_round_digits,string_ids",
+    [("pq", None, False), ("pq", 1, False), ("flat", None, False),
+     ("flat", None, True)],
+)
+def test_list_rows_equal_public_assign_and_encode(
+    spark, emb, idx, kind, encode_round_digits, string_ids
+):
+    """The one assign+encode pass of build and add writes exactly the
+    rows the public kernels compose to: ``nearest_centroids`` (n=1) for
+    the list, and ``pq_encode`` (PQ) or the vector itself (flat) for the
+    payload."""
+    from astro_sdk_spark.functions.pq import pq_encode
+    from astro_sdk_spark.functions.similarity import nearest_centroids
+
+    corpus = emb.select(
+        (F.concat(F.lit("v"), F.col("vec_id").cast("string"))
+         if string_ids else F.col("vec_id")).alias("vec_id"),
+        "embedding",
+        F.col("vec_id").alias("_n"),
+    )
+    cents = corpus.filter("_n < 16").drop("_n")
+    cbs = _codebooks_from(emb) if kind == "pq" else None
+    build_ann_index(
+        spark, corpus.filter("_n % 2 = 0").drop("_n"), idx, cents,
+        codebooks=cbs, encode_round_digits=encode_round_digits,
+    )
+    ann_index_add(spark, corpus.filter("_n % 2 = 1").drop("_n"), idx)
+
+    vecs = corpus.drop("_n")
+    assigned = nearest_centroids(vecs, cents, n=1)
+    payload = "pq_code" if kind == "pq" else "embedding"
+    side = (
+        pq_encode(vecs, cbs, round_digits=encode_round_digits)
+        if kind == "pq" else vecs
+    )
+    want = assigned.join(side, "vec_id").select("cent_id", "vec_id", payload)
+    got = spark.table(f"{idx}__lists").select(
+        "cent_id", "cand_id", "pq_code" if kind == "pq" else "vec"
+    )
+    assert got.schema["cand_id"].dataType == want.schema["vec_id"].dataType
+    assert got.schema["cent_id"].dataType == want.schema["cent_id"].dataType
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_readd_with_a_different_vector_is_skipped(spark, emb, idx):
+    """Dedupe is on the id alone: an id already in the live generation is
+    skipped whatever vector the new batch carries for it, and the new
+    ids of the same batch are added."""
+    build_ann_index(spark, emb.filter(F.col("vec_id") % 2 == 0), idx,
+                    emb.filter(F.col("vec_id") < 16))
+    lists = f"{idx}__lists"
+    before = sorted(map(tuple, spark.table(lists).collect()))
+    batch = emb.filter(F.col("vec_id") < 64).select(
+        "vec_id",
+        F.when(F.col("vec_id") % 2 == 0, F.reverse("embedding"))
+        .otherwise(F.col("embedding")).alias("embedding"),
+    )
+    ann_index_add(spark, batch, idx)
+    after = spark.table(lists)
+    assert sorted(map(tuple, after.filter(F.col("cand_id") % 2 == 0)
+                      .collect())) == before
+    added = after.filter(F.col("cand_id") % 2 == 1)
+    assert sorted(r.cand_id for r in added.collect()) == list(range(1, 64, 2))
+
+
+@pytest.mark.parametrize("kind", ["pq", "flat"])
+def test_micro_batch_add_does_not_shuffle_the_lists(
+    spark, emb, idx, tmp_path, kind
+):
+    """A micro-batch's dedupe scans the lists' id column map-side: the
+    small batch is the broadcast side of the semi-join that finds its ids
+    already indexed, so no stage that scans the lists writes a shuffle
+    byte (the anti-join this replaced shuffled the whole id column every
+    batch). The batch is a parquet file source, as a stream's micro-batch
+    is, so the planner sees its size. A warm PQ batch stays within its
+    job pin."""
+    from astro_sdk_spark.functions.ann_index import _append_assigned, _read_meta
+
+    kw = {"codebooks": _codebooks_from(emb)} if kind == "pq" else {}
+    build_ann_index(spark, emb.filter(F.col("vec_id") % 2 == 0), idx,
+                    emb.filter(F.col("vec_id") < 16), **kw)
+    meta = _read_meta(spark, idx)
+    ann_index_topk(spark, emb.filter(F.col("vec_id") < 2), idx).collect()
+    path = str(tmp_path / "micro_batch")
+    emb.filter(F.col("vec_id") % 2 == 1).write.parquet(path)
+    batch = spark.read.parquet(path)
+
+    _, jobs = _group_jobs(spark, f"ann_add_shuffle_{kind}", lambda: (
+        _append_assigned(spark, batch, idx, "vec_id", "embedding", meta=meta)
+    ))
+    scans = _stages_scanning(spark, jobs, f"{idx}__lists")
+    assert scans, "the dedupe did not scan the lists"
+    assert [s.shuffleWriteBytes() for s in scans] == [0] * len(scans)
+    assert spark.table(f"{idx}__lists").count() == emb.count()
+    budget = _BATCH_JOBS_WARM_PQ if kind == "pq" else _BATCH_JOBS_WARM
+    assert len(jobs) <= budget, (
+        f"warm {kind} micro-batch ran {len(jobs)} Spark jobs, budget {budget}"
+    )
+
+
+def test_warm_request_reads_no_meta(spark, emb, idx):
+    """The meta row is served from the per-process cache while the meta
+    table's file listing is unchanged: the first request of a process
+    reads ``__meta``, a warm one runs no job that does."""
+    build_ann_index(spark, emb, idx, emb.filter(F.col("vec_id") < 16),
+                    codebooks=_codebooks_from(emb))
+    q = emb.filter(F.col("vec_id") < 8)
+
+    def call():
+        return ann_index_topk(spark, q, idx, nprobe=4, k=10).collect()
+
+    _, cold = _group_jobs(spark, "ann_meta_cold", call)
+    assert _stages_scanning(spark, cold, f"{idx}__meta")
+    _, warm = _group_jobs(spark, "ann_meta_warm", call)
+    assert warm
+    assert not _stages_scanning(spark, warm, f"{idx}__meta")
+
+
+def test_meta_cache_sees_a_retrain_from_another_session_after_refresh(
+    spark, emb, idx, sf_dir
+):
+    """A retrain committed by another session becomes visible to a
+    session serving from the cache once that session refreshes the
+    index tables, as a plain read of the tables would: before the
+    refresh it answers the old or the new generation, never a mix;
+    after it, the new one."""
+    from astro_sdk_spark.functions.ann_index import _read_meta, ann_index_retrain
+    from astro_sdk_spark.functions.pq import ivfpq_topk
+
+    cbs = _codebooks_from(emb)
+    old_cents = emb.filter(F.col("vec_id") < 16)
+    new_cents = emb.filter(F.col("vec_id").between(16, 31))
+    build_ann_index(spark, emb, idx, old_cents, codebooks=cbs)
+    q = emb.filter(F.col("vec_id") < 8)
+    want_old, want_new = (
+        _pq_rows(ivfpq_topk(q, emb, centroids=c, codebooks=cbs, nprobe=4, k=10))
+        for c in (old_cents, new_cents)
+    )
+    assert want_old != want_new
+    assert _pq_rows(ann_index_topk(spark, q, idx, nprobe=4, k=10)) == want_old
+
+    # the retrain's inputs and writes all belong to the other session
+    other = spark.newSession()
+    other.catalog.setCurrentDatabase(spark.catalog.currentDatabase())
+    other_emb = other.read.parquet(f"{sf_dir}/embeddings.parquet")
+    ann_index_retrain(
+        other, idx, other_emb.filter(F.col("vec_id").between(16, 31)),
+        corpus=other_emb, codebooks=cbs,
+    )
+    before = _pq_rows(ann_index_topk(spark, q, idx, nprobe=4, k=10))
+    assert before in (want_old, want_new)
+    for suffix in ("centroids", "lists", "meta", "codebooks"):
+        spark.catalog.refreshTable(f"{idx}__{suffix}")
+    assert _read_meta(spark, idx)["generation"] == 1
+    assert _pq_rows(ann_index_topk(spark, q, idx, nprobe=4, k=10)) == want_new

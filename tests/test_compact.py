@@ -83,6 +83,27 @@ def test_compact_refuses_flat_rewrite_of_partitioned(spark, engine, part_table):
         engine.compact_table(part_table, partitions={"nope": 1})
 
 
+# Spark jobs of one compact_table(partitions=...) call on part_table
+# (measured): the files-before and files-after counts and the
+# dynamic-partition INSERT OVERWRITE. The partition columns come from
+# DESCRIBE TABLE, which runs none; catalog.listColumns made it 11.
+_COMPACT_PARTITION_JOBS = 8
+
+
+def test_compact_partition_job_count_is_pinned(spark, engine, part_table):
+    sc = spark.sparkContext
+    sc.setJobGroup("compact_partition_jobs", "job-count pin")
+    try:
+        engine.compact_table(part_table, partitions={"p": 1})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("compact_partition_jobs")
+    assert len(jobs) <= _COMPACT_PARTITION_JOBS, (
+        f"compact_table(partitions=...) ran {len(jobs)} Spark jobs, "
+        f"budget {_COMPACT_PARTITION_JOBS}"
+    )
+
+
 def test_compact_single_partition_leaves_others_untouched(spark, engine, part_table):
     name = part_table.qualified_name
     t = spark.table(name)
